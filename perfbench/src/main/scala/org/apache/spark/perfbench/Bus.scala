@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which is private to Spark: the traced run
+  * drains it before dumping, so no event of the last job is lost.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
