@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Staged
+
 /** Scale-study driver for the RULE-RESOLVED operator configurations —
   * the measurements the n-adaptive rules in [[ScaleConfig]] exist for.
   *
@@ -522,19 +524,21 @@ object ScaleStudy {
         .select(col("vec_id").as("query_id"), col("embedding").as("eq")))
       val w = Window.partitionBy("query_id")
         .orderBy(col("__m").desc, col("vec_id"))
-      val truth = vectors.select(col("vec_id"), col("embedding").as("ec"))
+      val truth = Staged.acquire(vectors.select(col("vec_id"), col("embedding").as("ec"))
         .crossJoin(q).where(col("query_id") =!= col("vec_id"))
         .withColumn("__m", dot(col("eq"), col("ec")) /
           (sqrt(dot(col("eq"), col("eq"))) * sqrt(dot(col("ec"), col("ec")))))
         .withColumn("rank", row_number().over(w)).where(col("rank") <= 3)
-        .select(col("query_id"), col("vec_id"), col("__m").as("tcos"))
-        .persist()
-      val out = run().where(col("vec_id") < nq).persist()
-      val hits = out.select(col("vec_id").as("query_id"), col("nbr_id").as("vec_id"))
-        .join(truth, Seq("query_id", "vec_id")).count()
-      val recall = hits.toDouble / (3.0 * nq)
-      val retSum = out.agg(sum("cosine")).head().getDouble(0)
-      val truSum = truth.agg(sum("tcos")).head().getDouble(0)
+        .select(col("query_id"), col("vec_id"), col("__m").as("tcos")),
+        eager = false)
+      val out = Staged.acquire(run().where(col("vec_id") < nq), eager = false)
+      val (recall, retSum, truSum) = Staged.within(truth, out) {
+        val hits = out.df.select(col("vec_id").as("query_id"), col("nbr_id").as("vec_id"))
+          .join(truth.df, Seq("query_id", "vec_id")).count()
+        (hits.toDouble / (3.0 * nq),
+          out.df.agg(sum("cosine")).head().getDouble(0),
+          truth.df.agg(sum("tcos")).head().getDouble(0))
+      }
       spark.stop()
       println(s"""{"metric":"sim_knn_join_capped","n":$n,"k":$k,""" +
         s""""probes":$probes,"cand_cap":${candCap.getOrElse(0)},""" +
@@ -559,13 +563,12 @@ object ScaleStudy {
       val rep = sys.env.get("SPARK_GRAFT_FMT_REP").map(_.toInt).getOrElse(10)
       val base0 = graft.sources.Tables(spark, sfDir).events
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      val ev = (0 until rep).map(i => base0
+      val ev = Staged.acquire((0 until rep).map(i => base0
           .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
           .withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 32} DAYS")))
         .reduce(_.unionAll(_))
-        .repartition(32)
-        .persist()
-      val nRows = ev.count()
+        .repartition(32), eager = false)
+      val nRows = ev.df.count() // the materializing pass, and the row total
       val fmtCsv = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       val schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
         "event_type STRING, value DOUBLE, props STRING"
@@ -582,63 +585,61 @@ object ScaleStudy {
       val embBase = graft.sources.Tables(spark, sfDir).embeddings
         .select("vec_id", "embedding")
       val embaSchema = embBase.schema
-      val emba = (0 until rep).map(i => embBase
+      val emba = Staged.acquire((0 until rep).map(i => embBase
           .withColumn("vec_id", col("vec_id") + lit(i.toLong * 10000000L)))
         .reduce(_.unionAll(_))
-        .repartition(32)
-        .persist()
-      emba.count()
+        .repartition(32))
       def aggArr(df: org.apache.spark.sql.DataFrame): Unit = df
         .agg(count(lit(1)),
           sum(expr("aggregate(embedding, 0d, (a, x) -> a + x)")))
         .write.format("noop").mode("overwrite").save()
-      val results = Seq(
+      val results = Staged.within(ev, emba)(Seq(
         ("parquet",
-          (d: String) => ev.write.mode("overwrite").parquet(d),
+          (d: String) => ev.df.write.mode("overwrite").parquet(d),
           (d: String) => agg(spark.read.parquet(d))),
         ("orc",
-          (d: String) => ev.write.mode("overwrite").orc(d),
+          (d: String) => ev.df.write.mode("overwrite").orc(d),
           (d: String) => agg(spark.read.orc(d))),
         // explicit micros timestampFormat (like the CSV leg): Spark's
         // default JSON format serializes millis, which would silently
         // truncate the micros the events table carries — all five legs
         // must round-trip the same values for the comparison to hold
         ("jsonl",
-          (d: String) => ev.write.mode("overwrite")
+          (d: String) => ev.df.write.mode("overwrite")
             .option("timestampFormat", fmtCsv).json(d),
           (d: String) => agg(spark.read.schema(schema)
             .option("timestampFormat", fmtCsv).json(d))),
         ("csv",
-          (d: String) => ev.write.mode("overwrite")
+          (d: String) => ev.df.write.mode("overwrite")
             .option("header", "true").option("timestampFormat", fmtCsv).csv(d),
           (d: String) => agg(spark.read.schema(schema)
             .option("header", "true").option("timestampFormat", fmtCsv).csv(d))),
         ("avro",
-          (d: String) => graft.sources.AvroIO.write(ev, d),
+          (d: String) => graft.sources.AvroIO.write(ev.df, d),
           (d: String) => agg(graft.sources.AvroIO.read(spark, d, base0.schema))),
         // the projection-pushdown path: same files, reader schema
         // pruned to the 4 columns the aggregate touches — writer-only
         // fields ride Avro's resolution skip path instead of being
         // materialized (read(…, columns) scaladoc has the mechanics)
         ("avro_pruned",
-          (d: String) => graft.sources.AvroIO.write(ev, d),
+          (d: String) => graft.sources.AvroIO.write(ev.df, d),
           (d: String) => agg(graft.sources.AvroIO.read(spark, d, base0.schema,
             Seq("ts", "event_type", "value", "props")))),
         // per-block deflate: the lever on the row format's byte-volume
         // gap (the r10 study's structural finding) — block compression
         // keeps sync-marker splittability, unlike whole-file gzip
         ("avro_deflate",
-          (d: String) => graft.sources.AvroIO.write(ev, d, codec = "deflate"),
+          (d: String) => graft.sources.AvroIO.write(ev.df, d, codec = "deflate"),
           (d: String) => agg(graft.sources.AvroIO.read(spark, d, base0.schema))),
         // ARRAY-payload legs (q66's complex-type surface): the
         // embeddings table rep×, parquet's native list encoding vs
         // AvroIO's recursive array path, aggregated by an in-row fold
         // over every element — the feature-payload CDC shape
         ("parquet_array",
-          (d: String) => emba.write.mode("overwrite").parquet(d),
+          (d: String) => emba.df.write.mode("overwrite").parquet(d),
           (d: String) => aggArr(spark.read.parquet(d))),
         ("avro_array",
-          (d: String) => graft.sources.AvroIO.write(emba, d),
+          (d: String) => graft.sources.AvroIO.write(emba.df, d),
           (d: String) => aggArr(graft.sources.AvroIO.read(spark, d, embaSchema)))
       ).map { case (name, w, r) =>
         val d0 = fresh(name); w(d0); r(d0) // warm-up, untimed
@@ -653,7 +654,7 @@ object ScaleStudy {
         s""""$name":{"write_sec":${samples.map(_._1).min},""" +
           s""""read_agg_sec":${samples.map(_._2).min},""" +
           s""""bytes":$bytes}"""
-      }
+      })
       spark.stop()
       println(s"""{"metric":"format_throughput","rows":$nRows,"rep":$rep,""" +
         results.mkString("", ",", ",") + s""""sf":"$sfDir"}""")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryModule
+import graft.core.Staged
 import graft.sources.Tables
 
 /** Deduplication operators over `documents` / `embeddings` — exact,
@@ -185,42 +186,6 @@ object Dedup extends QueryModule {
       .orderBy("doc_id")
   }
 
-  /** MinHash + LSH banded near-dup: shingle → 8 minhashes → 4 bands of
-    * 2 → candidate pairs from band-equality self-join → verify exact
-    * shingle-set Jaccard on candidates only.
-    *
-    * Minhashes come from [[graft.functions.MinhashSig]] — the whole
-    * signature computed in ONE pass inside the row that holds the
-    * shingle array. The previous build (explode → per-family md5 →
-    * min-aggregate on doc_id) was correct but shuffled one row per
-    * (doc, shingle-hash) to reassemble per-doc minima; at 100 TB that
-    * exchange carries the whole shingle corpus for a one-row-per-doc
-    * result. Fused, the signature build is pure map work — the FIRST
-    * shuffle of the query is the banded candidate join itself.
-    *
-    * The candidate self-join is an equi-join on (band_idx, band_val):
-    * cost scales with band-bucket sizes, not n². Verification re-joins
-    * the shingle arrays by doc_id on candidates only.
-    */
-  /** Materialize `result` into the CacheManager-tracked cache WHILE the
-    * builder's intermediate caches are still live, then release those
-    * intermediates — the unpersist-hygiene contract shared by the three
-    * persisting dedup builders ([[ddMinhashLsh]], [[ngramJaccard]],
-    * [[ddEmbedLsh]]). The returned DataFrame is cached and fully
-    * computed (the intermediates are never needed again); the ONLY
-    * block-manager resident a builder leaves behind is its own result —
-    * small by construction (capped candidate pairs), and the caller
-    * releases it with `.unpersist()` / `clearCache()` when done
-    * (DedupHygieneSpec asserts both halves). Without the eager
-    * materialization here, unpersisting the intermediates would make
-    * the caller's later action re-run the shingle/signature pipeline
-    * once per branch — the very work the persists exist to share.
-    */
-  private def settled(result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    try { result.persist().count(); result }
-    finally intermediates.foreach(_.unpersist())
-  }
-
   /** (doc_id, band_idx, band_val [, carry…]) for a (doc_id, sh [,
     * carry…]) frame — the LSH banding shared VERBATIM by
     * [[ddMinhashLsh]] and the streaming admission query
@@ -256,45 +221,61 @@ object Dedup extends QueryModule {
       struct(lit(b).as("band_idx"),
         substring(sig, b * BandRows * 8 + 1, BandRows * 8).as("band_val")))
 
-  def ddMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    // persist: the shingle pipeline feeds the minhash build AND both
+  /** MinHash + LSH banded near-dup: shingle → 8 minhashes → 4 bands of
+    * 2 → candidate pairs from band-equality self-join → verify exact
+    * shingle-set Jaccard on candidates only.
+    *
+    * Minhashes come from [[graft.functions.MinhashSig]] — the whole
+    * signature computed in ONE pass inside the row that holds the
+    * shingle array. The previous build (explode → per-family md5 →
+    * min-aggregate on doc_id) was correct but shuffled one row per
+    * (doc, shingle-hash) to reassemble per-doc minima; at 100 TB that
+    * exchange carries the whole shingle corpus for a one-row-per-doc
+    * result. Fused, the signature build is pure map work — the FIRST
+    * shuffle of the query is the banded candidate join itself.
+    *
+    * The candidate self-join is an equi-join on (band_idx, band_val):
+    * cost scales with band-bucket sizes, not n². Verification re-joins
+    * the shingle arrays by doc_id on candidates only.
+    */
+  def ddMinhashLsh(s: SparkSession, dir: String): DataFrame =
+    minhashLsh(s, dir).df
+
+  /** [[ddMinhashLsh]] as a handle, for [[nearDupGraph]] to release. */
+  private def minhashLsh(s: SparkSession, dir: String): Staged = {
+    // the shingle pipeline feeds the minhash build AND both
     // verification branches (sa/sb) — without it the zip_with shingling
     // re-runs three times. Production would stage this as a bucketed
-    // table; here the block-manager cache is the same role. Released
-    // before return — see [[settled]].
-    val sig = shingled(s, dir).select(col("doc_id"), col("sh")).persist()
-    sig.count() // eager materialization — see ngramJaccard's barrier note
-    try minhashLshFrom(sig) finally sig.unpersist()
+    // table; here the block-manager cache is the same role.
+    val sig = Staged.acquire(shingled(s, dir).select(col("doc_id"), col("sh")))
+    Staged.within(sig)(minhashLshFrom(sig.df))
   }
 
   /** [[ddMinhashLsh]]'s whole derivation over an ALREADY-SETTLED
     * (doc_id, sh) frame, so a composing pipeline
     * ([[ddPipelineManifest]]) can share ONE staged shingle pass between
     * this and its other shingle consumers instead of re-running
-    * tokenize+shingle per stage. Returns the settled (persisted,
-    * materialized) pair frame; `sig` stays persisted — the caller owns
-    * its release.
+    * tokenize+shingle per stage. Returns the settled pair frame; `sig`
+    * stays cached — the caller owns its release.
     */
-  private[graft] def minhashLshFrom(sig: DataFrame): DataFrame = {
-    val bands = bandsOf(sig)
-      // persist + eager count: okBands, the semi-join probe, and both
-      // self-join branches all read this tiny (n·Bands rows) table —
-      // settle it once instead of re-running the signature kernel 4×
-      .persist()
-    bands.count()
+  private[graft] def minhashLshFrom(sig: DataFrame): Staged = {
+    // okBands, the semi-join probe, and both self-join branches all
+    // read this tiny (n·Bands rows) table — settle it once instead of
+    // re-running the signature kernel 4×
+    val bands = Staged.acquire(bandsOf(sig))
     // Drop degenerate band buckets (> BandCap members) before the
     // self-join — see [[BandCap]]. Count-then-semi-join, NOT
     // collect_list-then-filter: a grouped list for the hot bucket would
     // hold every member in one aggregation buffer (the very blowup the
     // cap exists to prevent); counting is constant-space and map-side
     // combined.
-    val okBands = bands.groupBy("band_idx", "band_val")
+    val okBands = bands.df.groupBy("band_idx", "band_val")
       .agg(count(lit(1)).as("bc"))
       .where(col("bc") <= BandCap)
       .select("band_idx", "band_val")
     // shuffle_hash on the survivor set: at scale it is the (near-)full
     // distinct band-key table — never broadcast-able
-    val keptBands = bands
+    val keptBands = bands.df
       .join(okBands.hint("shuffle_hash"), Seq("band_idx", "band_val"), "left_semi")
       // same rationale as the postings join: shuffle on the band key,
       // never broadcast a signature table
@@ -307,7 +288,7 @@ object Dedup extends QueryModule {
       .distinct()
     val sa = sig.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
     val sb = sig.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
-    settled(
+    Staged.settle(
       cand.join(sa, "doc_a").join(sb, "doc_b")
         .withColumn("n_common", size(array_intersect(col("sha"), col("shb"))))
         .withColumn("n_union", size(array_union(col("sha"), col("shb"))))
@@ -367,36 +348,28 @@ object Dedup extends QueryModule {
     */
   private[graft] def ngramJaccard(staged: DataFrame, cap: Int): DataFrame = {
     val (pc, kept) = pairCounts(staged, cap)
-    settled(pc
+    Staged.settle(pc
       .withColumn("n_union", col("na") + col("nb") - col("n_common"))
       .where(col("n_common") * 5 >= col("n_union"))
       .select(col("lang"), col("doc_a"), col("doc_b"), col("n_common"), col("n_union"),
         round(col("n_common").cast("double") / col("n_union"), 6).as("jaccard"))
-      .orderBy("doc_a", "doc_b"), kept)
+      .orderBy("doc_a", "doc_b"), kept).df
   }
 
   /** Shared candidate machinery of [[ngramJaccard]] and
     * [[ddContainment]]: (lang, doc_a, doc_b, n_common, na, nb) for
     * every posting-overlapping pair under the hot-shingle cap, plus
-    * the still-persisted postings frame — each CALLER settles its own
-    * final projection against it (so exactly one cached frame, the
-    * caller's result, survives — DedupHygieneSpec's contract).
+    * the still-cached postings handle — each CALLER settles its own
+    * final projection against it, so its result is the only cached
+    * frame that survives.
     */
   private[graft] def pairCounts(staged: DataFrame, cap: Int)
-      : (DataFrame, DataFrame) = {
-    // persist: feeds the size table and BOTH candidate self-join branches
-    // — without it the shingle pipeline + cap re-runs three times.
-    // Materialized EAGERLY (count) before the fan-out: the self-join's two
-    // shuffle-map stages run concurrently, and letting them populate the
-    // cache lazily makes both race to compute the same partitions
-    // (per-partition cache locks, duplicated work under contention —
-    // observed 3× run-to-run swings at sf0.1). One deliberate pass, then
-    // every branch reads settled cache. Production would stage this as a
-    // bucketed table; the eager count is the same barrier. Released
-    // before return — see [[settled]].
-    val kept = cappedPostings(staged, cap).persist()
-    kept.count()
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_sh"))
+      : (DataFrame, Staged) = {
+    // feeds the size table and BOTH candidate self-join branches —
+    // without it the shingle pipeline + cap re-runs three times. Eager:
+    // the lazy race (see [[Staged.acquire]]) swung runs 3× at sf0.1.
+    val kept = Staged.acquire(cappedPostings(staged, cap))
+    val sizes = kept.df.groupBy("doc_id").agg(count(lit(1)).cast("int").as("n_sh"))
     // shuffle_hash hint (on the join inputs, not the shared persisted df —
     // a hint on `kept` would also dangle over the `sizes` branch): Spark
     // would otherwise BROADCAST one side of the self-join — rebuilding the
@@ -404,7 +377,7 @@ object Dedup extends QueryModule {
     // posting to the driver, which is exactly what must not happen at
     // 100 TB. A shuffled hash join keys both sides on (lang, shingle) —
     // the scalable shape.
-    val common = kept.as("x").hint("shuffle_hash").join(kept.as("y").hint("shuffle_hash"),
+    val common = kept.df.as("x").hint("shuffle_hash").join(kept.df.as("y").hint("shuffle_hash"),
         col("x.lang") === col("y.lang") && col("x.shingle") === col("y.shingle") &&
           col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.lang").as("lang"), col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -435,13 +408,13 @@ object Dedup extends QueryModule {
   /** Core of [[ddContainment]], cap-parameterized like [[ngramJaccard]]. */
   private[graft] def containmentPairs(staged: DataFrame, cap: Int): DataFrame = {
     val (pc, kept) = pairCounts(staged, cap)
-    settled(pc
+    Staged.settle(pc
       .where(col("n_common") * 5 >= least(col("na"), col("nb")) * 4)
       .select(col("lang"), col("doc_a"), col("doc_b"),
         col("n_common"), col("na"), col("nb"),
         round(col("n_common").cast("double") / col("na"), 6).as("c_ab"),
         round(col("n_common").cast("double") / col("nb"), 6).as("c_ba"))
-      .orderBy("doc_a", "doc_b"), kept)
+      .orderBy("doc_a", "doc_b"), kept).df
   }
 
   /** Capped postings index: explode each doc's distinct shingles, count
@@ -597,20 +570,15 @@ object Dedup extends QueryModule {
     val e = e0.select(col("vec_id"), col("embedding"),
       sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
     val sig = e.select(col("vec_id"), fusedSigFor(bits).as("sig"))
-    val bandRows = sig.select(
+    // both candidate self-join branches read this (n·Bands tiny rows):
+    // settling it once halves the signature kernel work
+    val bandRows = Staged.acquire(sig.select(
       col("vec_id"),
       explode(array((0 until bands).map(b =>
         struct(lit(b).as("band_idx"),
           substring(col("sig"), b * rowsPerBand + 1, rowsPerBand).as("band_val"))): _*)).as("band"))
-      .select(col("vec_id"), col("band.band_idx"), col("band.band_val"))
-      // persist + eager count: both candidate self-join branches read
-      // this (n·Bands tiny rows); settling it once halves the signature
-      // kernel work and avoids racing cache materialization — same
-      // barrier rationale as ngramJaccard. Released before return —
-      // see [[settled]].
-      .persist()
-    bandRows.count()
-    val bandsKeyed = bandRows
+      .select(col("vec_id"), col("band.band_idx"), col("band.band_val")))
+    val bandsKeyed = bandRows.df
       // shuffle on the band key, never broadcast-collect a signature table
       .hint("shuffle_hash")
     val cand = bandsKeyed.as("x").join(bandsKeyed.as("y"),
@@ -621,13 +589,13 @@ object Dedup extends QueryModule {
       .distinct()
     val ea = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("norm").as("na"))
     val eb = e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"), col("norm").as("nb"))
-    settled(
+    Staged.settle(
       cand.join(ea, "vec_a").join(eb, "vec_b")
         .withColumn("cosine", round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6))
         .where(col("cosine") >= 0.35)
         .select("vec_a", "vec_b", "cosine")
         .orderBy("vec_a", "vec_b"),
-      bandRows)
+      bandRows).df
   }
 
   def ddEmbedLsh(s: SparkSession, dir: String): DataFrame =
@@ -748,22 +716,20 @@ object Dedup extends QueryModule {
     // read BACK so assignment provably uses the persisted table the
     // oracle will read — not a diverging in-memory lineage
     val trained = vectors.sparkSession.read.parquet(centroidDir)
-    // persist: the assignment feeds both pair-join branches AND the
-    // final keep/drop projection — without it the k-distance argmin
-    // re-runs three times. Released before return — see [[settled]].
-    val assigned = KmeansIvf
+    // the assignment feeds both pair-join branches AND the final
+    // keep/drop projection — without it the k-distance argmin re-runs
+    // three times
+    val assigned = Staged.acquire(KmeansIvf
       .assignCells(e.select(col("vec_id"), col("embedding")), trained)
-      .join(e.select(col("vec_id"), col("norm")), Seq("vec_id"))
-      .persist()
-    assigned.count()
+      .join(e.select(col("vec_id"), col("norm")), Seq("vec_id")))
     // pair-join universe and drop set: uncapped = the plain within-cell
     // join; capped = core collapse + md5-blocked remainder (see
     // [[SemdedupCellCap]] for the scheme and its soundness argument)
-    val (keyed, extraDrops) = cellCap match {
-      case None => (assigned.withColumn("subcell", lit("")), None)
+    val (keyed, extraDrops, live) = cellCap match {
+      case None => (assigned.df.withColumn("subcell", lit("")), None, Seq(assigned))
       case Some(cap) =>
         // per-cell populations: ≤ k rows — broadcast back onto the rows
-        val counts = assigned.groupBy("cell").agg(count(lit(1)).as("__cc"))
+        val counts = assigned.df.groupBy("cell").agg(count(lit(1)).as("__cc"))
         val cents = broadcast(trained.select(col("cid").as("cell"),
           col("centroid").as("__ce"),
           sqrt(dot(col("centroid"), col("centroid"))).as("__cn")))
@@ -774,11 +740,11 @@ object Dedup extends QueryModule {
           when(col("__cc") <= cap, 0)) { (acc, c) =>
           acc.when(col("__cc") <= cap.toLong * (1L << (4 * c)), c)
         }.otherwise(SemdedupMaxBlockChars)
-        // persist: five consumers read this frame (core min, core
-        // drops, both pair-join branches, the final projection) — the
-        // measured ×10 overhead of recomputing the enrichment per
-        // consumer was ~1.5× the whole query. Released in [[settled]].
-        val lbl = assigned.join(broadcast(counts), Seq("cell"))
+        // five consumers read this frame (core min, core drops, both
+        // pair-join branches, the final projection) — the measured ×10
+        // overhead of recomputing the enrichment per consumer was ~1.5×
+        // the whole query. Populated lazily by the settle below.
+        val lbl = Staged.acquire(assigned.df.join(broadcast(counts), Seq("cell"))
           .join(cents, Seq("cell"))
           .withColumn("__cosc", round(
             dot(col("embedding"), col("__ce")) / (col("norm") * col("__cn")), 6))
@@ -788,18 +754,18 @@ object Dedup extends QueryModule {
           .withColumn("subcell", when(col("__core"), lit("core")).otherwise(
             expr("substr(md5(concat('graft-semdedup-block|', " +
               "cast(vec_id as string))), 1, __chars)")))
-          .select("vec_id", "cell", "subcell", "embedding", "norm", "__core")
-          .persist()
+          .select("vec_id", "cell", "subcell", "embedding", "norm", "__core"),
+          eager = false)
         // core collapse: all but the lowest-id core member drop — the
         // O(|cell|) replacement for the quadratic join on the tight
         // cluster that made the cell oversized in the first place
-        val coreMin = lbl.where(col("__core"))
+        val coreMin = lbl.df.where(col("__core"))
           .groupBy("cell").agg(min("vec_id").as("__cmin"))
-        val coreDrops = lbl.where(col("__core"))
+        val coreDrops = lbl.df.where(col("__core"))
           .join(broadcast(coreMin), Seq("cell"))
           .where(col("vec_id") > col("__cmin"))
           .select(col("vec_id"))
-        (lbl, Some(coreDrops))
+        (lbl.df, Some(coreDrops), Seq(assigned, lbl))
     }
     val pairSide = keyed.where(cellCap match {
       case None => lit(true)
@@ -822,12 +788,12 @@ object Dedup extends QueryModule {
       .select(col("vec_id"), col("cell"), col("subcell"))
       .join(dropped, Seq("vec_id"), "left")
       .withColumn("kept", col("__dropped").isNull)
-    settled(
+    Staged.settle(
       (if (cellCap.isDefined)
         labeled.select("vec_id", "cell", "subcell", "kept")
       else labeled.select("vec_id", "cell", "kept"))
         .orderBy("vec_id"),
-      Seq(assigned) ++ (if (cellCap.isDefined) Seq(keyed) else Nil): _*)
+      live: _*).df
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): SEMANTIC dedup by
@@ -921,23 +887,15 @@ object Dedup extends QueryModule {
     * fixture.
     */
   private[graft] def dupSpans(docs0: DataFrame): DataFrame = {
-    val t = docs0
-      .select(col("doc_id"),
-        filter(graft.functions.ByteSplit.split(col("text")),
-          x => x =!= "").as("__w"))
-      .where(size(col("__w")) >= DupSpanK)
-    // persist: the window stream feeds the hot-gram build AND the final
-    // join — one tokenize+md5 pass instead of two. Released before
-    // return — see [[settled]].
-    // fused k-window md5 kernel: one joined byte stream per doc, one
-    // md5 per window — replaces the per-window slice/array_join/md5
-    // transform (three allocations per window). Bit-identical hex
-    // (GramMd5Spec fuzz vs the staged builtin form).
-    val grams = t.select(col("doc_id"),
-        explode(graft.functions.GramMd5.of(col("__w"), DupSpanK)).as("gh"))
-      .persist()
-    grams.count()
-    settled(dupSpanManifest(grams), grams)
+    val t = spanTokens(docs0).where(size(col("__w")) >= DupSpanK)
+    // the window stream feeds the hot-gram build AND the final join —
+    // one tokenize+md5 pass instead of two. Fused k-window md5 kernel:
+    // one joined byte stream per doc, one md5 per window — replaces the
+    // per-window slice/array_join/md5 transform (three allocations per
+    // window). Bit-identical hex (GramMd5Spec fuzz vs the builtin form).
+    val grams = Staged.acquire(t.select(col("doc_id"),
+        explode(graft.functions.GramMd5.of(col("__w"), DupSpanK)).as("gh")))
+    Staged.settle(dupSpanManifest(grams.df), grams).df
   }
 
   /** Hot-gram build + per-doc manifest over a (doc_id, gh) window
@@ -945,18 +903,36 @@ object Dedup extends QueryModule {
     * so PlanShapeSpec can assert its join topology on an unpersisted
     * input (the oracled query caches its result, hiding the plan).
     */
-  private[graft] def dupSpanManifest(grams: DataFrame): DataFrame = {
-    val hot = grams.select("gh", "doc_id").distinct()
-      .groupBy("gh").agg(count(lit(1)).as("nd"))
-      .where(col("nd") >= 2)
-    grams.join(hot, Seq("gh"), "left")
+  private[graft] def dupSpanManifest(grams: DataFrame): DataFrame =
+    grams.join(hotGrams(grams), Seq("gh"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("nd").isNotNull, 1L).otherwise(0L)).as("n_dup_windows"))
       .withColumn("dup_ratio",
         round(col("n_dup_windows").cast("double") / col("n_windows"), 6))
       .orderBy("doc_id")
-  }
+
+  /** (doc_id, __w): each document's non-empty byte-split tokens. */
+  private def spanTokens(docs0: DataFrame): DataFrame =
+    docs0.select(col("doc_id"),
+      filter(graft.functions.ByteSplit.split(col("text")), x => x =!= "").as("__w"))
+
+  /** Window hashes seen in ≥ 2 distinct documents, with that count `nd`. */
+  private def hotGrams(grams: DataFrame): DataFrame =
+    grams.select("gh", "doc_id").distinct()
+      .groupBy("gh").agg(count(lit(1)).as("nd"))
+      .where(col("nd") >= 2)
+
+  /** Positional window stream (doc_id, i, gh), i = 0-based start token,
+    * of the [[spanTokens]] rows with ≥ [[DupSpanK]] tokens (fused
+    * gram_md5 kernel — see [[dupSpans]]). Cached: the hot-gram build
+    * and the join back both read it.
+    */
+  private def positionalGrams(t: DataFrame): Staged =
+    Staged.acquire(t.where(size(col("__w")) >= DupSpanK)
+      .select(col("doc_id"),
+        posexplode(graft.functions.GramMd5.of(col("__w"), DupSpanK))
+        .as(Seq("i", "gh"))))
 
   /** Duplicated-span EXTENTS — the step a pipeline actually cuts on
     * (Lee et al. 2021 removes the duplicated SPANS, not the documents):
@@ -983,27 +959,13 @@ object Dedup extends QueryModule {
     * DupSpansSpec can pin the merge arithmetic on crafted fixtures.
     */
   private[graft] def dupSpanExtents(docs0: DataFrame): DataFrame = {
-    val t = docs0
-      .select(col("doc_id"),
-        filter(graft.functions.ByteSplit.split(col("text")),
-          x => x =!= "").as("__w"))
-      .where(size(col("__w")) >= DupSpanK)
-    // positional window stream: (doc_id, i, gh), i = 0-based start token
-    // (fused gram_md5 kernel — see dupSpans)
-    val grams = t.select(col("doc_id"),
-        posexplode(graft.functions.GramMd5.of(col("__w"), DupSpanK))
-        .as(Seq("i", "gh")))
-      .persist()
-    grams.count()
-    val hot = grams.select("gh", "doc_id").distinct()
-      .groupBy("gh").agg(count(lit(1)).as("nd"))
-      .where(col("nd") >= 2)
-      .select("gh")
+    val grams = positionalGrams(spanTokens(docs0))
+    val hot = hotGrams(grams.df).select("gh")
     // gaps-and-islands: consecutive duplicated windows share
     // i − rank(i), so each maximal run collapses to one group
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("i")
-    val extents = grams.join(hot, Seq("gh"))
+    val extents = grams.df.join(hot, Seq("gh"))
       .withColumn("island", col("i") - row_number().over(w))
       .groupBy("doc_id", "island")
       .agg(min("i").as("start_tok"),
@@ -1013,7 +975,7 @@ object Dedup extends QueryModule {
         (col("end_tok") - col("start_tok") + 1).cast("long").as("span_tokens"),
         col("n_dup_windows"))
       .orderBy("doc_id", "start_tok")
-    settled(extents, grams)
+    Staged.settle(extents, grams).df
   }
 
   /** Span CUTTING — the transformation [[ddDupSpanExtents]] only plans:
@@ -1039,21 +1001,10 @@ object Dedup extends QueryModule {
     * DupSpansSpec can pin the cut arithmetic on crafted fixtures.
     */
   private[graft] def spanCut(docs0: DataFrame): DataFrame = {
-    val t = docs0.select(col("doc_id"),
-      filter(graft.functions.ByteSplit.split(col("text")),
-        x => x =!= "").as("__w"))
-    val grams = t.where(size(col("__w")) >= DupSpanK)
-      .select(col("doc_id"),
-        // fused gram_md5 kernel — see dupSpans
-        posexplode(graft.functions.GramMd5.of(col("__w"), DupSpanK))
-        .as(Seq("i", "gh")))
-      .persist()
-    grams.count()
-    val hot = grams.select("gh", "doc_id").distinct()
-      .groupBy("gh").agg(count(lit(1)).as("nd"))
-      .where(col("nd") >= 2)
-      .select("gh")
-    val starts = grams.join(hot, Seq("gh"))
+    val t = spanTokens(docs0)
+    val grams = positionalGrams(t)
+    val hot = hotGrams(grams.df).select("gh")
+    val starts = grams.df.join(hot, Seq("gh"))
       .groupBy("doc_id").agg(collect_list(col("i")).as("__starts"))
     val out = t.join(starts, Seq("doc_id"), "left")
       .withColumn("__covered", when(col("__starts").isNull, array())
@@ -1067,7 +1018,7 @@ object Dedup extends QueryModule {
         (size(col("__w")) - size(col("__keep"))).cast("long").as("n_cut"),
         md5(array_join(col("__keep"), " ")).as("kept_md5"))
       .orderBy("doc_id")
-    settled(out, grams)
+    Staged.settle(out, grams).df
   }
 
   /** Connected components over an undirected pair list — the cluster-
@@ -1112,60 +1063,75 @@ object Dedup extends QueryModule {
     */
   private[graft] val MaxPropagationRounds = 5
 
+  /** Distinct (a, b) edges of a (doc_a, doc_b) pair frame, both
+    * directions, self-pairs dropped: they carry no clustering
+    * information, and dropping them keeps [[propagateLabels]]' node set
+    * IDENTICAL to [[starLabels]]' (which must drop them for its
+    * star-fixpoint test) — the two are interchangeable on ANY input.
+    */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
+      .where(col("a") =!= col("b"))
+      .distinct()
+
   /** Min-label propagation to fixpoint, bounded: returns
     * (Some(labels), rounds) on convergence within `maxRounds`, else
     * (None, maxRounds). Package-visible so specs can measure the round
     * count against the component diameter.
+    *
+    * Trade-off of the two-hop fusion: convergence is only observed on a
+    * change-free round, and round 5 carries hops 9 and 10. So with
+    * [[MaxPropagationRounds]] = 5, a component that converges at hop
+    * 9–10 exhausts the budget and takes the [[starLabels]] fallback:
+    * the same labels, with the discarded propagation rounds plus the
+    * star contraction as extra work.
     */
   private[graft] def propagateLabels(
       pairs: DataFrame, maxRounds: Int): (Option[DataFrame], Int) = {
-    val e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      // self-pairs carry no clustering information; dropping them here
-      // keeps this path's node set IDENTICAL to starLabels' (which must
-      // drop them for its star-fixpoint test) — the two algorithms are
-      // interchangeable on ANY input, not just self-loop-free input
-      .where(col("a") =!= col("b"))
-      .distinct().persist()
-    var labels = e.groupBy(col("a").as("doc_id"))
-      .agg(min("b").as("mn"))
-      .select(col("doc_id"), least(col("doc_id"), col("mn")).as("cluster_id"))
-      .localCheckpoint(true)
-    var converged = false
-    var rounds = 0
-    // min label over each node's neighborhood under labeling `l`
-    def neighborMin(l: DataFrame, out: String): DataFrame = e
-      .join(l.select(col("doc_id").as("b"), col("cluster_id").as("nl")), "b")
-      .groupBy(col("a").as("doc_id")).agg(min("nl").as(out))
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      // TWO propagation hops per materialization — half the driver
-      // round trips (checkpoint + convergence probe) for the same
-      // shuffle volume. hop1 is a plain subplan (labels and e are
-      // cached leaves, so its double reference re-reads blocks, not
-      // lineage). Equivalence: with m = hop1's labeling,
-      //   least(l(v), min_{u∈N(v)} m(u)) = least(m(v), min_{u∈N(v)} m(u))
-      // because m(v) = least(l(v), min_{u∈N(v)} l(u)) and
-      // min_u m(u) ≤ min_u l(u) — so `next` IS the exact 2-hop label.
-      val hop1 = labels.join(neighborMin(labels, "nmin"), "doc_id")
-        .select(col("doc_id"),
-          least(col("cluster_id"), col("nmin")).as("cluster_id"))
-      // carry a per-row changed flag through the (eager) checkpoint:
-      // the convergence test is then a predicate scan of the already-
-      // materialized round, not a labels-vs-next join job. The flag
-      // sees BOTH hops: labels decrease monotonically, and a hop-1
-      // change at u forces nmin2(u) ≤ hop1(w*) < l(u) via u's changed
-      // neighbor w*, so no hop-1 change can hide behind a quiet hop 2.
-      val next = labels.join(neighborMin(hop1, "nmin2"), "doc_id")
-        .select(col("doc_id"),
-          least(col("cluster_id"), col("nmin2")).as("cluster_id"),
-          (col("nmin2") < col("cluster_id")).as("__chg"))
+    // populated by the initial labels checkpoint; every round's labels
+    // are checkpointed, so nothing returned reads it
+    val e = Staged.acquire(undirected(pairs), eager = false)
+    Staged.within(e) {
+      var labels = e.df.groupBy(col("a").as("doc_id"))
+        .agg(min("b").as("mn"))
+        .select(col("doc_id"), least(col("doc_id"), col("mn")).as("cluster_id"))
         .localCheckpoint(true)
-      converged = next.where(col("__chg")).isEmpty
-      labels = next.select("doc_id", "cluster_id")
+      var converged = false
+      var rounds = 0
+      // min label over each node's neighborhood under labeling `l`
+      def neighborMin(l: DataFrame, out: String): DataFrame = e.df
+        .join(l.select(col("doc_id").as("b"), col("cluster_id").as("nl")), "b")
+        .groupBy(col("a").as("doc_id")).agg(min("nl").as(out))
+      while (!converged && rounds < maxRounds) {
+        rounds += 1
+        // TWO propagation hops per materialization — half the driver
+        // round trips (checkpoint + convergence probe) for the same
+        // shuffle volume. hop1 is a plain subplan (labels and e are
+        // cached leaves, so its double reference re-reads blocks, not
+        // lineage). Equivalence: with m = hop1's labeling,
+        //   least(l(v), min_{u∈N(v)} m(u)) = least(m(v), min_{u∈N(v)} m(u))
+        // because m(v) = least(l(v), min_{u∈N(v)} l(u)) and
+        // min_u m(u) ≤ min_u l(u) — so `next` IS the exact 2-hop label.
+        val hop1 = labels.join(neighborMin(labels, "nmin"), "doc_id")
+          .select(col("doc_id"),
+            least(col("cluster_id"), col("nmin")).as("cluster_id"))
+        // carry a per-row changed flag through the (eager) checkpoint:
+        // the convergence test is then a predicate scan of the already-
+        // materialized round, not a labels-vs-next join job. The flag
+        // sees BOTH hops: labels decrease monotonically, and a hop-1
+        // change at u forces nmin2(u) ≤ hop1(w*) < l(u) via u's changed
+        // neighbor w*, so no hop-1 change can hide behind a quiet hop 2.
+        val next = labels.join(neighborMin(hop1, "nmin2"), "doc_id")
+          .select(col("doc_id"),
+            least(col("cluster_id"), col("nmin2")).as("cluster_id"),
+            (col("nmin2") < col("cluster_id")).as("__chg"))
+          .localCheckpoint(true)
+        converged = next.where(col("__chg")).isEmpty
+        labels = next.select("doc_id", "cluster_id")
+      }
+      (if (converged) Some(labels) else None, rounds)
     }
-    e.unpersist()
-    (if (converged) Some(labels) else None, rounds)
   }
 
   /** Connected components by ALTERNATING STAR CONTRACTION (the
@@ -1191,10 +1157,7 @@ object Dedup extends QueryModule {
     // computes every partition of this edge set anyway (the small-star
     // aggregate shuffles all of it), so the deferred materialization
     // costs no extra job — one driver action saved vs eager.
-    var e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint(false)
+    var e = undirected(pairs).localCheckpoint(false)
     var rounds = 0
     var done = false
     while (!done) {
@@ -1251,10 +1214,18 @@ object Dedup extends QueryModule {
     * one chained component hash-mismatches.
     */
   def ddCluster(s: SparkSession, dir: String): DataFrame =
-    clusterPairs(
-      ddMinhashLsh(s, dir).where(col("jaccard") >= 0.5)
-        .select("doc_a", "doc_b"))
-      .orderBy("doc_id")
+    // both clustering paths checkpoint their labels eagerly
+    nearDupGraph(s, dir)(clusterPairs).orderBy("doc_id")
+
+  /** `f` over [[ddMinhashLsh]]'s verified J ≥ 0.5 pairs (doc_a, doc_b).
+    * The pair cache is released when `f` returns, so `f` must hand back
+    * a materialized result.
+    */
+  private def nearDupGraph(s: SparkSession, dir: String)(
+      f: DataFrame => DataFrame): DataFrame = {
+    val lsh = minhashLsh(s, dir)
+    Staged.within(lsh)(f(lsh.df.where(col("jaccard") >= 0.5).select("doc_a", "doc_b")))
+  }
 
   /** Chain length for [[ddClusterChain]]'s pathological fixture —
     * diameter 31 ≫ [[MaxPropagationRounds]], so min-label propagation
@@ -1328,19 +1299,14 @@ object Dedup extends QueryModule {
     * rounds are fixed at [[PrIters]] so plan depth is constant.
     */
   def ddPagerank(s: SparkSession, dir: String): DataFrame =
-    pagerank(ddMinhashLsh(s, dir).where(col("jaccard") >= 0.5)
-      .select("doc_a", "doc_b"))
+    nearDupGraph(s, dir)(pagerank)
 
   /** Core of [[ddPagerank]] over any (doc_a, doc_b) pair frame, so a
     * spec can pin closed-form fixtures (stars, cliques, paths).
     */
   private[graft] def pagerank(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .union(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .where(col("a") =!= col("b"))
-      .distinct().persist()
-    e.count()
-    val deg = e.groupBy("a").agg(count(lit(1)).as("deg"))
+    val e = Staged.acquire(undirected(pairs))
+    val deg = e.df.groupBy("a").agg(count(lit(1)).as("deg"))
     val n1 = deg.agg(count(lit(1)).as("n_nodes"))
     var pr = deg.crossJoin(broadcast(n1))
       .select(col("a").as("doc_id"), col("deg"), col("n_nodes"),
@@ -1348,7 +1314,7 @@ object Dedup extends QueryModule {
     for (_ <- 1 to PrIters) {
       val contrib = pr.select(col("doc_id").as("b"),
         expr("pr div deg").as("c"))
-      val inSum = e.join(contrib, "b")
+      val inSum = e.df.join(contrib, "b")
         .groupBy(col("a").as("doc_id")).agg(sum("c").as("s"))
       pr = pr.drop("pr").join(inSum, "doc_id")
         .withColumn("pr", expr(s"((${PrScale}L div n_nodes) * 15) div 100" +
@@ -1364,7 +1330,7 @@ object Dedup extends QueryModule {
     }
     val out = pr.select(col("doc_id"), col("deg"), col("pr"))
       .orderBy("doc_id")
-    settled(out, e)
+    Staged.settle(out, e).df
   }
 
   /** The dedup POLICY step — what a pipeline actually DOES with the
@@ -1435,10 +1401,10 @@ object Dedup extends QueryModule {
     * caps and banding rules are oracled separately.
     */
   def ddManifest(s: SparkSession, dir: String): DataFrame = {
-    val clusters = ddCluster(s, dir).persist()
-    clusters.count() // settle: read by keep-best scoring AND membership
-    settled(manifestOf(graft.sources.Tables(s, dir).documents, clusters),
-      clusters)
+    // read by keep-best scoring AND membership
+    val clusters = Staged.acquire(ddCluster(s, dir))
+    Staged.settle(manifestOf(graft.sources.Tables(s, dir).documents, clusters.df),
+      clusters).df
   }
 
   /** Core over any (docs, clusters) pair so ManifestSpec can pin the
@@ -1803,20 +1769,18 @@ object Dedup extends QueryModule {
     // minhash near-dup derivation and the lexical contamination screen
     // previously each re-ran tokenize+shingle over the corpus
     // (ddMinhashLsh's internal stage was released before contam's
-    // action fired). Same settle/release discipline as [[settled]]'s
-    // other callers: the pipeline's own manifest is the only cached
-    // frame left behind.
-    val staged = shingled(s, dir).select(col("doc_id"), col("sh")).persist()
-    staged.count()
-    val pairs = minhashLshFrom(staged).select("doc_a", "doc_b", "jaccard")
-    val lexHits = contam(staged, broadcastTest = false)
+    // action fired).
+    val staged = Staged.acquire(shingled(s, dir).select(col("doc_id"), col("sh")))
+    val lsh = minhashLshFrom(staged.df)
+    val pairs = lsh.df.select("doc_a", "doc_b", "jaccard")
+    val lexHits = contam(staged.df, broadcastTest = false)
       .select(col("doc_id"), col("contam_ratio"))
     val sem = contamEmbed(Tables(s, dir).embeddings, ContamBothEvalMod)
       .select(col("vec_id").as("doc_id"))
-    settled(
+    Staged.settle(
       pipelineCore(graft.core.FanOut(Tables(s, dir).documents), pairs,
         lexHits, sem, PipelineDomainQuota),
-      staged, pairs)
+      staged, lsh).df
   }
 
   /** Core of [[ddPipelineManifest]] over explicit stage inputs, so the

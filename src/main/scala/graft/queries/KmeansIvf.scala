@@ -172,29 +172,28 @@ object KmeansIvf {
     // one assignment per iteration); as a lazy frame each read re-runs
     // the whole derivation — for the sampled callers that is a full
     // corpus scan + TakeOrdered PER ITERATION for a trainCap-row
-    // result. Persist for the duration of training and release once
-    // the final centroids are materialized (they are eagerly
-    // checkpointed every round) — the standard posture (MLlib's
-    // KMeans caches uncached input and warns if it can't). At 100 TB
+    // result. Cached for the loop (every round's centroids are
+    // checkpointed, so nothing returned reads it) — the standard
+    // posture (MLlib's KMeans caches uncached input). At 100 TB
     // the documented path bounds this set with trainCap; the
     // full-corpus gate variants spill to disk like any cached scan.
-    val cached = vectors.persist()
-    try {
+    val cached = graft.core.Staged.acquire(vectors, eager = false)
+    graft.core.Staged.within(cached) {
       var centroids =
         if (seedSmallest) {
           val w = Window.orderBy(col("vec_id"))
-          cached.orderBy(col("vec_id")).limit(k)
+          cached.df.orderBy(col("vec_id")).limit(k)
             .select((row_number().over(w) - 1).as("cid"),
               col("embedding").as("centroid"))
-        } else cached.where(col("vec_id") < k)
+        } else cached.df.where(col("vec_id") < k)
           .select(col("vec_id").cast("int").as("cid"), col("embedding").as("centroid"))
       (1 to iters).foreach { _ =>
         val updated = reestimate(
-          assignCells(cached, centroids).select(col("cell"), col("embedding")))
+          assignCells(cached.df, centroids).select(col("cell"), col("embedding")))
         val kept = centroids.join(updated, Seq("cid"), "left_anti")
         centroids = updated.unionByName(kept).localCheckpoint(eager = true)
       }
       centroids
-    } finally cached.unpersist()
+    }
   }
 }

@@ -208,31 +208,30 @@ object Pq {
     // persist the training subvectors for the loop: each iteration's
     // encode would otherwise re-run the whole derivation (scan →
     // residual → subvector explode — and for sampled callers the
-    // corpus-scan + TakeOrdered sample) from scratch. Released once
-    // the final codebook is materialized (eagerly checkpointed every
-    // round) — same MLlib-style posture as [[KmeansIvf.train]].
-    val cached = subs.persist()
-    try {
+    // corpus-scan + TakeOrdered sample) from scratch — same
+    // MLlib-style posture as [[KmeansIvf.train]].
+    val cached = graft.core.Staged.acquire(subs, eager = false)
+    graft.core.Staged.within(cached) {
       var codebook =
         if (seedSmallest) {
           import org.apache.spark.sql.expressions.Window
           val w = Window.orderBy(col("vec_id"))
-          val seedIds = cached.select("vec_id").distinct()
+          val seedIds = cached.df.select("vec_id").distinct()
             .orderBy(col("vec_id")).limit(k)
             .select(col("vec_id"), (row_number().over(w) - 1).as("cid"))
-          cached.join(seedIds, Seq("vec_id"))
+          cached.df.join(seedIds, Seq("vec_id"))
             .select(col("m"), col("cid"), col("sv").as("centroid"))
-        } else cached.where(col("vec_id") < k)
+        } else cached.df.where(col("vec_id") < k)
           .select(col("m"), col("vec_id").cast("int").as("cid"),
             col("sv").as("centroid"))
       (1 to iters).foreach { _ =>
-        val assigned = encode(cached, codebook).select(col("m"), col("cid"), col("sv"))
+        val assigned = encode(cached.df, codebook).select(col("m"), col("cid"), col("sv"))
         val updated = reestimate(assigned)
         val kept = codebook.join(updated, Seq("m", "cid"), "left_anti")
         codebook = updated.unionByName(kept).localCheckpoint(eager = true)
       }
       codebook
-    } finally cached.unpersist()
+    }
   }
 
   /** Fixed-point scale for re-estimation sums — see

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryModule
+import graft.core.Staged
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline over `documents`:
@@ -561,31 +562,26 @@ object TextAnalysis extends QueryModule {
     val t = d
       .select(col("doc_id"), filter(toks, x => x =!= "").as("__w"))
       .where(size(col("__w")) >= 2)
-    // persist: the bigram fan-out feeds LM training AND scoring — one
-    // tokenize pass instead of three. Released after the result
-    // materializes (same settle discipline as Dedup.settled).
-    val big = t.select(col("doc_id"), explode(expr(
+    // the bigram fan-out feeds LM training AND scoring — one tokenize
+    // pass instead of three (settle and release: [[graft.core.Staged]])
+    val big = Staged.acquire(t.select(col("doc_id"), explode(expr(
         "zip_with(slice(__w, 1, size(__w) - 1), slice(__w, 2, size(__w) - 1), " +
           "(a, b) -> named_struct('w1', a, 'w2', b))")).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .persist()
-    big.count()
-    // vocab from the PERSISTED bigram stream, not a second tokenize
+      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")))
+    // vocab from the CACHED bigram stream, not a second tokenize
     // pass over t: every doc here has ≥ 2 tokens, so each token sits in
     // w1 (positions 1..n−1) or w2 (positions 2..n) of some bigram — the
     // distinct-value SET is identical (countDistinct ignores
     // multiplicity), and the scan reads the settled cache instead of
     // re-running tokenize+explode over the corpus.
-    val vocab = big.select(col("w1").as("x"))
-      .union(big.select(col("w2").as("x")))
+    val vocab = big.df.select(col("w1").as("x"))
+      .union(big.df.select(col("w2").as("x")))
       .agg(countDistinct(col("x")).as("v"))
-    // persist: the per-doc scores feed the histogram-derived thresholds
-    // AND the final bucket projection — without this the bigram scoring
-    // join re-runs (and drags the vocab broadcast with it)
-    val scored = pplScore(big, vocab).persist()
-    scored.count()
-    big.unpersist()
-    val h = scored.groupBy(floor(col("score") * 100).as("bin"))
+    // the per-doc scores feed the histogram-derived thresholds AND the
+    // final bucket projection — without this the bigram scoring join
+    // re-runs (and drags the vocab broadcast with it)
+    val scored = Staged.settle(pplScore(big.df, vocab), big)
+    val h = scored.df.groupBy(floor(col("score") * 100).as("bin"))
       .agg(count(lit(1)).as("n"))
     // `tot` from the histogram itself (Σ n over bins ≡ count of scored
     // rows — every row lands in exactly one bin) instead of a second
@@ -601,15 +597,13 @@ object TextAnalysis extends QueryModule {
     val th = cum.agg(
         min(when(col("cum") >= expr("(tot + 2) div 3"), col("bin"))).as("t1"),
         min(when(col("cum") >= expr("(2 * tot + 2) div 3"), col("bin"))).as("t2"))
-    val out = scored.crossJoin(broadcast(th))
+    val out = scored.df.crossJoin(broadcast(th))
       .select(col("doc_id"), round(col("score"), 6).as("ppl_bits"),
         when(floor(col("score") * 100) <= col("t1"), "head")
           .when(floor(col("score") * 100) <= col("t2"), "middle")
           .otherwise("tail").as("bucket"))
       .orderBy("doc_id")
-    out.persist().count()
-    scored.unpersist()
-    out
+    Staged.settle(out, scored).df
   }
 
   /** LM training + bigram scoring over a (doc_id, w1, w2) stream and a
@@ -903,17 +897,15 @@ object TextAnalysis extends QueryModule {
     val t = d
       .select(col("doc_id"), col("lang"), filter(toks, x => x =!= "").as("__w"))
       .where(size(col("__w")) >= 2)
-    val feats = t.select(col("doc_id"), col("lang"), explode(expr(
+    val feats = Staged.acquire(t.select(col("doc_id"), col("lang"), explode(expr(
         "zip_with(slice(__w, 1, size(__w) - 1), slice(__w, 2, size(__w) - 1), " +
           "(a, b) -> concat(a, ' ', b))")).as("bg"))
       .withColumn("bucket",
         substring(md5(concat(lit("graft-dsir-1|"), col("bg"))), 1,
           DsirFeatureHexChars))
-      .select("doc_id", "lang", "bucket")
-      .persist()
-    feats.count()
-    val target = feats.where(col("lang") === "en")
-    val raw = feats.where(col("lang") =!= "en")
+      .select("doc_id", "lang", "bucket"))
+    val target = feats.df.where(col("lang") === "en")
+    val raw = feats.df.where(col("lang") =!= "en")
     val mt = target.groupBy("bucket").agg(count(lit(1)).as("ct"))
     val mr = raw.groupBy("bucket").agg(count(lit(1)).as("cr"))
     val nt = target.agg(count(lit(1)).as("nt"))
@@ -930,7 +922,7 @@ object TextAnalysis extends QueryModule {
       .agg(count(lit(1)).as("n_feats"), sum(col("s")).cast("long").as("w_int"))
       .withColumn("keep", col("w_int") > 0)
       .orderBy("doc_id")
-    try { out.persist().count(); out } finally feats.unpersist()
+    Staged.settle(out, feats).df
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.queries.Dedup
 
 /** Cluster formation on pathological graph shapes: min-label propagation
-  * pays one round per hop of component diameter (fine for quasi-clique
-  * dedup components, hopeless for chains), while the alternating
-  * large-star/small-star contraction converges in O(log² n) rounds on
-  * anything. Both must produce the IDENTICAL labeling — components and
-  * their min labels are properties of the graph, not the algorithm.
+  * pays one round per two hops of component diameter (fine for
+  * quasi-clique dedup components, hopeless for chains), while the
+  * alternating large-star/small-star contraction converges in O(log² n)
+  * rounds on anything. Both must produce the IDENTICAL labeling —
+  * components and their min labels are properties of the graph, not
+  * the algorithm.
   */
 class ClusterChainSpec extends SparkSpec {
 
@@ -24,7 +25,8 @@ class ClusterChainSpec extends SparkSpec {
   test("propagation rounds track the chain diameter past the budget") {
     val (labels, rounds) = Dedup.propagateLabels(chain(64), maxRounds = 100)
     assert(labels.isDefined)
-    // min label walks one hop per round from node 0 down the chain
+    // min label walks two hops per round (one checkpoint) from node 0
+    // down the chain
     assert(rounds > Dedup.MaxPropagationRounds,
       s"chain-64 converged in $rounds rounds — the fallback would never fire")
     assert(labelsOf(labels.get) === (0L until 64L).map(_ -> 0L).toMap)

@@ -3,7 +3,7 @@ package graft
 import graft.queries.Dedup
 
 /** The unpersist-hygiene contract of the persisting dedup builders
-  * (`Dedup.settled`): each builder releases every INTERMEDIATE cache
+  * (`graft.core.Staged.settle`): each builder releases every INTERMEDIATE cache
   * before returning, leaving at most its own (already materialized)
   * result in the block manager — which the caller releases with
   * `unpersist()`. An application looping these builders over daily

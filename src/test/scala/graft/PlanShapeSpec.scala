@@ -600,7 +600,10 @@ class PlanShapeSpec extends SparkSpec {
     val staged = D.shingleDocs(
         spark.read.parquet(s"$sfDir/documents.parquet"))
       .select(col("doc_id"), col("sh"))
-    val pairs = D.minhashLshFrom(staged).select("doc_a", "doc_b", "jaccard")
+    // release the settled pair frame itself: unpersisting a projection
+    // of it would release nothing and leak it into later suites
+    val lsh = D.minhashLshFrom(staged)
+    val pairs = lsh.df.select("doc_a", "doc_b", "jaccard")
     val lexHits = D.contam(staged, broadcastTest = false)
       .select(col("doc_id"), col("contam_ratio"))
     val sem = D.contamEmbed(
@@ -610,7 +613,7 @@ class PlanShapeSpec extends SparkSpec {
         spark.read.parquet(s"$sfDir/documents.parquet"), pairs, lexHits, sem,
         D.PipelineDomainQuota)
       .queryExecution.executedPlan.toString
-    pairs.unpersist()
+    lsh.df.unpersist()
     // no unbounded pair blowup anywhere in the 7-stage composition
     assert(!p.contains("CartesianProduct"), s"cartesian in the pipeline:\n$p")
     // the two BroadcastNestedLoopJoins are contamEmbed's deliberate

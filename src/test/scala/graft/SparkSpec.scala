@@ -11,6 +11,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // shared across suites; JVM exit cleans up
+
+  /** Frames cached in the session's CacheManager. Not
+    * `getPersistentRDDs`: localCheckpoint blocks stay in that until the
+    * ContextCleaner's next GC.
+    */
+  def cachedEntries: Int = org.apache.spark.sql.CacheEntries.count(spark)
 }
 
 object SparkSpec {
