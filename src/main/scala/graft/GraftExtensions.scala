@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
-import graft.functions.{ByteSplit, DotProduct, MinhashSig, NormalizeWord, RefHashWord, RepSig, RollingHash, SimhashSig}
+import graft.functions.{ByteSplit, DotProduct, MinhashSig, NormalizeWord, RefHashWord, RepSig, RollingHash, SimhashSig, WordTokens}
 
 /** Session-extension entry point: build a session with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or pass
@@ -31,6 +31,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     register(ext, "normalize_word", classOf[NormalizeWord])(e => NormalizeWord(e.head))
     register(ext, "byte_split", classOf[ByteSplit])(e => ByteSplit(e.head))
+    register(ext, "word_tokens", classOf[WordTokens])(e => WordTokens(e.head))
     register(ext, "ref_hash_word", classOf[RefHashWord])(e => RefHashWord(e.head))
     register(ext, "dot_product", classOf[DotProduct])(e => DotProduct(e(0), e(1)))
     register(ext, "simhash_sig", classOf[SimhashSig])(e => SimhashSig(e.head))

@@ -11,9 +11,18 @@ import org.apache.spark.sql.functions._
   * Expressed Spark-first that is ONE declarative plan:
   *
   * {{{
-  *   FileScan text → Generate(explode(split)) → Filter
+  *   FileScan text → Filter(value != '') → Generate(explode(word_tokens(value)))
   *     → HashAggregate(partial) → Exchange(hash(word)) → HashAggregate(final)
   * }}}
+  *
+  * The mapper's per-token work (`getWord` → `normalizeWord` → `strlen`
+  * cap, `mpi_mapreduce.c:119-161,208-211`) is the one fused kernel
+  * [[graft.functions.WordTokens]], evaluated once per line and followed
+  * by no Filter. Staging it as [[tokenize]] → [[normalize]] → a length
+  * filter would normalize every token three times: the optimizer pushes
+  * the filter beneath the projection and inlines `normalize_word(tok)`
+  * into both of its length comparisons. PlanShapeSpec pins the fused
+  * shape.
   *
   * Everything the reference hand-builds — reader/mapper/reducer thread
   * pools, bounded queues, scratch-file shuffle, master–worker file
@@ -114,13 +123,12 @@ object WordCount {
   }
 
   /** Full pipeline: lines → (word, count). One shuffle, map-side combined.
-    * The length cap is in BYTES (octet_length), matching the C
-    * `strlen(w) > WORD_LENGTH` drop at `mpi_mapreduce.c:209-211`.
+    * The length cap is in BYTES, matching the C `strlen(w) > WORD_LENGTH`
+    * drop at `mpi_mapreduce.c:209-211`; [[graft.functions.WordTokens]]
+    * applies it together with the split and normalize.
     */
   def count(lines: DataFrame): DataFrame =
-    tokenize(lines)
-      .select(normalize(col("tok")).as("word"))
-      .where(octet_length(col("word")) > 0 && octet_length(col("word")) <= WordLength)
+    lines.select(explode(graft.functions.WordTokens.of(col("value"))).as("word"))
       .groupBy("word")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("count"))
 

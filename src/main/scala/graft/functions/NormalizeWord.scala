@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference engine's `normalizeWord` (`mpi_mapreduce.c:133-161`) as
@@ -12,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * smart quotes, any UTF-8 continuation byte) compare negative and are
   * "non-alpha".
   *
-  * Semantics: ASCII-lowercase in place; if at least one [a-z] byte
+  * Semantics: ASCII-lowercase; if at least one [a-z] byte
   * exists, strip leading/trailing non-alpha bytes; an all-non-alpha
   * token (`...`, `1871`) passes through unchanged. Output stays valid
   * UTF-8 whenever the input is: a multi-byte sequence is entirely
@@ -20,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One O(n) pass over the bytes replaces the built-in combo
   * (translate + rlike + regexp_replace = three scans plus regex
-  * machinery) in the word-count hot path.
+  * machinery). Word count itself runs the fused [[WordTokens]], which
+  * applies the same rule per token; this is its staged twin.
   */
 case class NormalizeWord(child: Expression)
     extends UnaryExpression {
@@ -44,30 +46,45 @@ case class NormalizeWord(child: Expression)
 
 /** Static implementation, referenced by both interpreted eval and the
   * generated Java (kept companion-free so scalac emits plain static
-  * forwarders Janino can call).
+  * forwarders Janino can call). [[strip]] is the C rule shared with
+  * [[WordTokensImpl]], so the staged and fused word-count paths cannot
+  * drift apart.
   */
 object NormalizeWordImpl {
-  def normalize(s: UTF8String): UTF8String = {
-    // getBytes may return UTF8String's INTERNAL array when the string is
-    // exactly array-aligned — copy before mutating.
-    val raw = s.getBytes
-    val bytes = java.util.Arrays.copyOf(raw, raw.length)
-    val n = bytes.length
-    var hasAlpha = false
-    var i = 0
-    while (i < n) {
-      val b = bytes(i)
-      if (b >= 'A' && b <= 'Z') { bytes(i) = (b + 32).toByte; hasAlpha = true }
-      else if (b >= 'a' && b <= 'z') hasAlpha = true
-      i += 1
-    }
-    if (!hasAlpha) UTF8String.fromBytes(bytes)
+
+  /** The C alpha test (`mpi_mapreduce.c:139-141`) on a byte of either
+    * case. Signed: bytes ≥ 0x80 are negative and never letters.
+    */
+  private def isLetter(b: Byte): Boolean = {
+    val l = b | 0x20
+    l >= 'a' && l <= 'z'
+  }
+
+  /** ASCII-only lowercase (`mpi_mapreduce.c:138`). */
+  def lower(b: Byte): Byte = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+
+  /** The C strip rule on the bytes `[from, until)` at `base` + `offset`,
+    * read in place: a view from the first to the last ASCII letter, or
+    * of the whole range when it has no letter (kept verbatim).
+    */
+  def strip(base: AnyRef, offset: Long, from: Int, until: Int): UTF8String = {
+    var lo = from
+    while (lo < until && !isLetter(Platform.getByte(base, offset + lo))) lo += 1
+    if (lo == until) UTF8String.fromAddress(base, offset + from, until - from)
     else {
-      var lo = 0
-      while (!(bytes(lo) >= 'a' && bytes(lo) <= 'z')) lo += 1
-      var hi = n - 1
-      while (!(bytes(hi) >= 'a' && bytes(hi) <= 'z')) hi -= 1
-      UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, lo, hi + 1))
+      var hi = until
+      while (!isLetter(Platform.getByte(base, offset + hi - 1))) hi -= 1
+      UTF8String.fromAddress(base, offset + lo, hi - lo)
     }
+  }
+
+  /** Reads `s` without mutating it; the output array is the only copy. */
+  def normalize(s: UTF8String): UTF8String = {
+    val span = strip(s.getBaseObject, s.getBaseOffset, 0, s.numBytes)
+    val out = new Array[Byte](span.numBytes)
+    span.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET)
+    var i = 0
+    while (i < out.length) { out(i) = lower(out(i)); i += 1 }
+    UTF8String.fromBytes(out)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.WordCount
-import graft.functions.RefHash
+import graft.functions.{RefHash, WordTokens}
 import graft.QueryModule
 import graft.sources.Tables
 
@@ -20,7 +20,7 @@ object WordCountQueries extends QueryModule {
   private def lines(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documents.select(col("text").as("value"))
 
-  /** Full word count: tokenize → normalize → filter → count.
+  /** Full word count: the fused split + normalize + length cap, then count.
     * The single-Exchange plan described in [[graft.core.WordCount]].
     */
   def wcWordCount(s: SparkSession, dir: String): DataFrame =
@@ -42,11 +42,7 @@ object WordCountQueries extends QueryModule {
     */
   def wcDocTokens(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documents
-      .select(col("doc_id"),
-        explode(graft.functions.ByteSplit.split(col("text"))).as("tok"))
-      .select(col("doc_id"), WordCount.normalize(col("tok")).as("word"))
-      .where(octet_length(col("word")) > 0 &&
-        octet_length(col("word")) <= WordCount.WordLength)
+      .select(col("doc_id"), explode(WordTokens.of(col("text"))).as("word"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), countDistinct(col("word")).as("n_distinct"))
       .orderBy("doc_id")

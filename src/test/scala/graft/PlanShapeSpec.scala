@@ -34,11 +34,49 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  /** The map side of a word-count plan is the fused kernel alone:
+    * `word_tokens` evaluated once, no `normalize_word`, and no Filter
+    * between the Generate and the partial aggregate above it (a filter
+    * there is how the staged form came to normalize each token 3 times).
+    */
+  private def assertFusedMapSide(name: String): Unit = {
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import graft.functions.{NormalizeWord, WordTokens}
+    val root = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    def pathTo(p: SparkPlan)(hit: SparkPlan => Boolean): Option[Seq[SparkPlan]] =
+      if (hit(p)) Some(Seq(p))
+      else children(p).iterator.map(pathTo(_)(hit)).collectFirst { case Some(t) => p +: t }
+    val exprs = nodes(root).flatMap(_.expressions)
+    assert(exprs.map(_.collect { case w: WordTokens => w }.size).sum == 1,
+      s"$name must evaluate word_tokens exactly once:\n$root")
+    assert(exprs.forall(_.find(_.isInstanceOf[NormalizeWord]).isEmpty),
+      s"$name must not run normalize_word:\n$root")
+    val path = pathTo(root)(_.isInstanceOf[GenerateExec])
+      .getOrElse(fail(s"$name has no Generate:\n$root"))
+    val mapSide = path.drop(path.lastIndexWhere(_.isInstanceOf[HashAggregateExec]))
+    assert(mapSide.head.isInstanceOf[HashAggregateExec],
+      s"$name: no partial aggregate above the Generate:\n$root")
+    assert(!mapSide.exists(_.isInstanceOf[FilterExec]),
+      s"$name: Filter between the Generate and the partial aggregate:\n$root")
+  }
+
   test("wc: exactly one hash-partition exchange keyed on word pre-sort") {
     val df = SparkEntry.queries("wc_word_count")(spark, sfDir)
     val p = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning\\(word".r.findAllIn(p).size
     assert(exchanges == 1, s"expected ONE word-keyed exchange, plan:\n$p")
+    assertFusedMapSide("wc_word_count")
+  }
+
+  test("wc_doc_tokens: word_tokens once, no normalize_word, no Filter before the partial aggregate") {
+    assertFusedMapSide("wc_doc_tokens")
   }
 
   test("dd_simhash: fused signature leaves NO key-hash exchange (map work + sort only)") {

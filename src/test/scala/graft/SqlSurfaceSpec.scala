@@ -26,6 +26,23 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(viaSql.toSeq === viaApi.toSeq)
   }
 
+  test("word_tokens resolves in SQL and matches the Column API") {
+    import spark.implicits._
+    Seq("The QUICK. brown  fox", "éclair au café", "...  1871", "")
+      .toDF("value").createOrReplaceTempView("sql_surface_words")
+    val viaSql = spark.sql(
+      """SELECT w FROM sql_surface_words
+        |LATERAL VIEW explode(word_tokens(value)) t AS w
+        |ORDER BY w""".stripMargin).collect()
+    val viaApi = spark.table("sql_surface_words")
+      .select(explode(graft.functions.WordTokens.of(col("value"))).as("w"))
+      .orderBy("w").collect()
+    assert(viaSql.toSeq === viaApi.toSeq)
+    // é is two non-alpha bytes to the C rule, so it is stripped at the ends
+    assert(viaSql.map(_.getString(0)).toSeq ===
+      Seq("...", "1871", "au", "brown", "caf", "clair", "fox", "quick", "the"))
+  }
+
   test("dot_product and minhash_sig resolve in SQL and match the Column API") {
     import spark.implicits._
     Seq((Array(1f, 2f, 3f), Array(4f, 5f, 6f), Seq("a b c", "d e f")))
