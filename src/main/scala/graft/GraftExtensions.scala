@@ -18,7 +18,10 @@ import graft.functions.{ByteSplit, DotProduct, MinhashSig, NormalizeWord, RefHas
   * spark-submit — sees the same function surface. Every custom
   * expression with a SQL-able signature is registered;
   * `hyperplane_sig` is not (its hyperplane weights are a plan-time
-  * constant array, not a SQL literal — use the Scala API).
+  * constant array, not a SQL literal — use the Scala API). Nor is the
+  * `word_counts` generator behind `WordCount.count`: its rows are partial
+  * counts of a whole task's lines, not a function of one row, so they
+  * mean something only when summed per word.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -6,38 +6,56 @@ import org.apache.spark.sql.functions._
 /** Reference-parity word-count pipeline (SURVEY.md §2, §7).
   *
   * The reference engine's whole query surface is: parallel text scan →
-  * tokenize → normalize → hash-partition → partial aggregate → shuffle →
-  * final aggregate → text sink (reference: `mpi_mapreduce.c:500-866`).
-  * Expressed Spark-first that is ONE declarative plan:
+  * tokenize → normalize → per-mapper hash table → hash-partition →
+  * reduce → text sink (reference: `mpi_mapreduce.c:500-866`). Expressed
+  * Spark-first that is ONE declarative plan:
   *
   * {{{
-  *   FileScan text → Filter(value != '') → Generate(explode(word_tokens(value)))
-  *     → HashAggregate(partial) → Exchange(hash(word)) → HashAggregate(final)
+  *   FileScan text → Filter(value != '') → Generate(word_counts(value))
+  *     → Exchange(hash(word), spark.sql.shuffle.partitions, REPARTITION_BY_NUM)
+  *     → HashAggregate(partial sum) → HashAggregate(final sum)
   * }}}
   *
   * The mapper's per-token work (`getWord` → `normalizeWord` → `strlen`
-  * cap, `mpi_mapreduce.c:119-161,208-211`) is the one fused kernel
-  * [[graft.functions.WordTokens]], evaluated once per line and followed
-  * by no Filter. Staging it as [[tokenize]] → [[normalize]] → a length
-  * filter would normalize every token three times: the optimizer pushes
-  * the filter beneath the projection and inlines `normalize_word(tok)`
-  * into both of its length comparisons. PlanShapeSpec pins the fused
-  * shape.
+  * cap → `insert`, `mpi_mapreduce.c:119-161,208-243`) is the one kernel
+  * [[graft.functions.WordCounts]]: it runs the fused split + normalize +
+  * cap pass over each line and counts the surviving words in a per-task
+  * table, so a map task emits one `(word, n)` row per distinct word
+  * instead of one row per token for a partial HashAggregate to hash
+  * again. Staging it as [[tokenize]] → [[normalize]] → a length filter
+  * would normalize every token three times: the optimizer pushes the
+  * filter beneath the projection and inlines `normalize_word(tok)` into
+  * both of its length comparisons. PlanShapeSpec pins the plan.
+  *
+  * The exchange is a repartition into the session's
+  * `spark.sql.shuffle.partitions`, the role of the reference's fixed
+  * `nReducers` (`mpi_mapreduce.c:775-786`). Its origin,
+  * REPARTITION_BY_NUM, is one AQE does not coalesce: left to
+  * ENSURE_REQUIREMENTS, AQE's 1 MB minimum partition size folds a small
+  * shuffle (1.8 MB over 4 partitions on the benchmark corpus) into ONE
+  * reduce task that starts only after every map task ends. The reduce
+  * side then sums without another exchange, batch or streaming (the
+  * repartition already has the stateful aggregate's distribution).
   *
   * Everything the reference hand-builds — reader/mapper/reducer thread
   * pools, bounded queues, scratch-file shuffle, master–worker file
   * distribution, termination sentinels (~400 LoC of C/MPI) — is the Spark
-  * scheduler + sort shuffle. Map-side combining (`insert`,
-  * `mpi_mapreduce.c:208-243`) is the automatic partial HashAggregate.
+  * scheduler + sort shuffle.
   *
-  * Scale notes (100 TB): the plan has exactly one Exchange, keyed on
-  * `word`. Input parallelism comes from file splits
-  * (`spark.sql.files.maxPartitionBytes`), not reader-thread counts;
-  * reduce parallelism from `spark.sql.shuffle.partitions` + AQE
-  * coalescing. Skewed hot words (stopwords) are absorbed by the partial
-  * aggregate: each map task emits at most one row per distinct word, so
-  * the shuffle volume is O(distinct-words × map-tasks), independent of
-  * corpus size.
+  * Scale notes (100 TB):
+  *   - the plan has exactly one Exchange, keyed on `word`;
+  *   - input parallelism comes from file splits
+  *     (`spark.sql.files.maxPartitionBytes`), not reader-thread counts;
+  *   - reduce parallelism is `spark.sql.shuffle.partitions` exactly, read
+  *     when the plan is built; set it to the reducer width the data
+  *     needs, as the reference sets `nReducers`;
+  *   - a task's table holds at most `WordCountsImpl.MaxWords` (2^18)
+  *     distinct words (~4 MB of slots plus the words' bytes), then emits
+  *     and clears itself, so map memory is bounded whatever the corpus;
+  *   - shuffle volume is O(distinct words × map tasks × flushes per
+  *     task), independent of corpus size: skewed hot words (stopwords)
+  *     cost one row per task, and a task flushes only when it sees more
+  *     than 2^18 distinct words.
   */
 object WordCount {
 
@@ -122,15 +140,21 @@ object WordCount {
     } else lowered
   }
 
-  /** Full pipeline: lines → (word, count). One shuffle, map-side combined.
-    * The length cap is in BYTES, matching the C `strlen(w) > WORD_LENGTH`
-    * drop at `mpi_mapreduce.c:209-211`; [[graft.functions.WordTokens]]
-    * applies it together with the split and normalize.
+  /** Full pipeline: lines → (word, count), with `count` a non-null
+    * bigint. [[graft.functions.WordCounts]] splits, normalizes, applies
+    * the length cap in BYTES (the C `strlen(w) > WORD_LENGTH` drop at
+    * `mpi_mapreduce.c:209-211`) and counts, per task; the repartition
+    * sends each word to one of the session's shuffle partitions, where
+    * the partial counts are summed. `sum` is nullable, so the coalesce
+    * keeps `count` NOT NULL, as it was under `count(1)`.
     */
-  def count(lines: DataFrame): DataFrame =
-    lines.select(explode(graft.functions.WordTokens.of(col("value"))).as("word"))
+  def count(lines: DataFrame): DataFrame = {
+    val reducers = lines.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    lines.select(graft.functions.WordCounts.of(col("value")))
+      .repartition(reducers, col("word"))
       .groupBy("word")
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("count"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("count"))
+  }
 
   /** End-to-end job: files in, counts out. */
   def run(spark: SparkSession, paths: Seq[String]): DataFrame =

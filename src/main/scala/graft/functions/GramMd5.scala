@@ -27,6 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * slice's 0-start; every consumer filters first). For size(w) < k this
   * kernel returns an empty array — unreachable from the declared
   * queries, pinned only so the expression totals.
+  *
+  * Null elements (only an input type with `containsNull = true` can
+  * hold them) follow the staged form too: they still count as window
+  * positions, but array_join skips them, so a window digests its
+  * non-null tokens joined by single spaces ("" when it has none). That
+  * path is chosen at plan time; the dup-span queries feed
+  * `containsNull = false` arrays and run the null-free loop.
   */
 case class GramMd5(child: Expression, k: Int) extends UnaryExpression {
 
@@ -40,11 +47,17 @@ case class GramMd5(child: Expression, k: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "gram_md5"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GramMd5Impl.grams(input.asInstanceOf[ArrayData], k)
+  @transient private lazy val nullElements =
+    child.dataType.asInstanceOf[ArrayType].containsNull
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramMd5Impl.grams($c, $k)")
+  override protected def nullSafeEval(input: Any): Any =
+    if (nullElements) GramMd5Impl.gramsSkippingNulls(input.asInstanceOf[ArrayData], k)
+    else GramMd5Impl.grams(input.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = if (nullElements) "gramsSkippingNulls" else "grams"
+    defineCodeGen(ctx, ev, c => s"graft.functions.GramMd5Impl.$kernel($c, $k)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): GramMd5 =
     copy(child = newChild)
@@ -69,22 +82,53 @@ object GramMd5Impl {
   def grams(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     if (n < k) return new GenericArrayData(Array.empty[AnyRef])
-    // single-space-joined token stream + per-token start offsets
     val toks = new Array[Array[Byte]](n)
-    var joinedLen = 0
     var i = 0
     while (i < n) {
-      val t = arr.getUTF8String(i).getBytes
-      toks(i) = t
-      joinedLen += t.length
+      toks(i) = arr.getUTF8String(i).getBytes
       i += 1
     }
-    if (n > 1) joinedLen += n - 1
+    windows(toks, n, n, k, null)
+  }
+
+  /** [[grams]] over an array that may hold nulls: each window joins only
+    * its non-null tokens, as array_join does.
+    */
+  def gramsSkippingNulls(arr: ArrayData, k: Int): ArrayData = {
+    val n = arr.numElements()
+    if (n < k) return new GenericArrayData(Array.empty[AnyRef])
+    val toks = new Array[Array[Byte]](n)
+    // rank(i): the number of non-null tokens before position i
+    val rank = new Array[Int](n + 1)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) {
+        toks(m) = arr.getUTF8String(i).getBytes
+        m += 1
+      }
+      i += 1
+      rank(i) = m
+    }
+    windows(toks, m, n, k, rank)
+  }
+
+  /** The digests of the n - k + 1 windows over `toks(0 until m)`. Window
+    * g covers tokens `rank(g) until rank(g + k)`, or `g until g + k`
+    * when `rank` is null (no null elements, so m == n).
+    */
+  private def windows(toks: Array[Array[Byte]], m: Int, n: Int, k: Int,
+      rank: Array[Int]): ArrayData = {
+    // single-space-joined token stream + per-token start offsets
+    var joinedLen = 0
+    var i = 0
+    while (i < m) { joinedLen += toks(i).length; i += 1 }
+    if (m > 1) joinedLen += m - 1
     val joined = new Array[Byte](joinedLen)
-    val starts = new Array[Int](n + 1)
+    val starts = new Array[Int](m + 1)
     var pos = 0
     i = 0
-    while (i < n) {
+    while (i < m) {
       if (i > 0) { joined(pos) = ' '; pos += 1 }
       starts(i) = pos
       val t = toks(i)
@@ -92,15 +136,19 @@ object GramMd5Impl {
       pos += t.length
       i += 1
     }
-    starts(n) = pos + 1 // sentinel: start of the would-be next token
+    starts(m) = pos + 1 // sentinel: start of the would-be next token
     val digest = md.get()
     val out = new Array[AnyRef](n - k + 1)
     var g = 0
     while (g <= n - k) {
-      val from = starts(g)
-      val until = starts(g + k) - 1 // drop the joining space (or sentinel)
+      val first = if (rank == null) g else rank(g)
+      val end = if (rank == null) g + k else rank(g + k)
       digest.reset()
-      digest.update(joined, from, until - from)
+      if (end > first) {
+        val from = starts(first)
+        val until = starts(end) - 1 // drop the joining space (or sentinel)
+        digest.update(joined, from, until - from)
+      }
       val d = digest.digest()
       val hex = new Array[Byte](32)
       var b = 0

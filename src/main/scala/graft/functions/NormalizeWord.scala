@@ -21,8 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One O(n) pass over the bytes replaces the built-in combo
   * (translate + rlike + regexp_replace = three scans plus regex
-  * machinery). Word count itself runs the fused [[WordTokens]], which
-  * applies the same rule per token; this is its staged twin.
+  * machinery). Word count itself runs the fused [[WordCounts]] (and
+  * `wc_doc_tokens` the fused [[WordTokens]]), which apply the same rule
+  * per token; this is their staged twin.
   */
 case class NormalizeWord(child: Expression)
     extends UnaryExpression {
@@ -46,9 +47,10 @@ case class NormalizeWord(child: Expression)
 
 /** Static implementation, referenced by both interpreted eval and the
   * generated Java (kept companion-free so scalac emits plain static
-  * forwarders Janino can call). [[strip]] is the C rule shared with
-  * [[WordTokensImpl]], so the staged and fused word-count paths cannot
-  * drift apart.
+  * forwarders Janino can call). [[strip]] is the C rule; [[LineWords]],
+  * the line pass of the fused word-count kernels, applies it through
+  * the same [[firstLetter]]/[[pastLastLetter]] scans, so the staged and
+  * fused paths cannot drift apart.
   */
 object NormalizeWordImpl {
 
@@ -63,19 +65,32 @@ object NormalizeWordImpl {
   /** ASCII-only lowercase (`mpi_mapreduce.c:138`). */
   def lower(b: Byte): Byte = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
 
+  /** Index of the first ASCII letter in `[from, until)` at `base` +
+    * `offset`, or `until` when there is none.
+    */
+  def firstLetter(base: AnyRef, offset: Long, from: Int, until: Int): Int = {
+    var lo = from
+    while (lo < until && !isLetter(Platform.getByte(base, offset + lo))) lo += 1
+    lo
+  }
+
+  /** One past the last ASCII letter before `until`; the caller has found
+    * a letter in the range with [[firstLetter]].
+    */
+  def pastLastLetter(base: AnyRef, offset: Long, until: Int): Int = {
+    var hi = until
+    while (!isLetter(Platform.getByte(base, offset + hi - 1))) hi -= 1
+    hi
+  }
+
   /** The C strip rule on the bytes `[from, until)` at `base` + `offset`,
     * read in place: a view from the first to the last ASCII letter, or
     * of the whole range when it has no letter (kept verbatim).
     */
   def strip(base: AnyRef, offset: Long, from: Int, until: Int): UTF8String = {
-    var lo = from
-    while (lo < until && !isLetter(Platform.getByte(base, offset + lo))) lo += 1
+    val lo = firstLetter(base, offset, from, until)
     if (lo == until) UTF8String.fromAddress(base, offset + from, until - from)
-    else {
-      var hi = until
-      while (!isLetter(Platform.getByte(base, offset + hi - 1))) hi -= 1
-      UTF8String.fromAddress(base, offset + lo, hi - lo)
-    }
+    else UTF8String.fromAddress(base, offset + lo, pastLastLetter(base, offset, until) - lo)
   }
 
   /** Reads `s` without mutating it; the output array is the only copy. */

@@ -75,10 +75,17 @@ object WinnowHashes {
   * Docs shorter than one window select from the single truncated
   * window, matching the least()-capped builtin. Bit-equality with the
   * staged form is fuzz-checked in WinnowKernelSpec.
+  *
+  * An input type that can hold null elements is rejected at analysis:
+  * the loop reads every element as a long, and its only consumer feeds
+  * [[WinnowHashes]]' null-free arrays.
   */
 case class WinnowSelect(child: Expression, window: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
+      "winnow_select requires array<bigint> without null elements " +
+        "(containsNull = false), such as winnow_hashes' output")
     case ArrayType(LongType, _) if window > 0 => TypeCheckResult.TypeCheckSuccess
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckFailure(
       s"winnow_select: window must be positive, got $window")

@@ -20,8 +20,9 @@ object WordCountQueries extends QueryModule {
   private def lines(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir).documents.select(col("text").as("value"))
 
-  /** Full word count: the fused split + normalize + length cap, then count.
-    * The single-Exchange plan described in [[graft.core.WordCount]].
+  /** Full word count: the fused split + normalize + length cap counted in
+    * a per-task table, then summed per word. The single-Exchange plan
+    * described in [[graft.core.WordCount]].
     */
   def wcWordCount(s: SparkSession, dir: String): DataFrame =
     WordCount.count(lines(s, dir))

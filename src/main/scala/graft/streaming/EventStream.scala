@@ -15,8 +15,9 @@ import graft.core.WordCount
   * store, partitioned by the grouping key across
   * `spark.sql.shuffle.partitions` tasks; watermarks bound state size by
   * evicting windows older than the allowed lateness. The word-count
-  * stream is exactly the batch plan run incrementally — partial
-  * aggregation still combines map-side before the stateful exchange.
+  * stream is exactly the batch plan run incrementally: each micro-batch
+  * task counts its lines' words in its own table before the one word
+  * repartition, which already has the stateful aggregate's distribution.
   */
 /** Input event for [[EventStream.sessionize]]. Case classes are
   * top-level (not nested in the object): encoder-generated code needs

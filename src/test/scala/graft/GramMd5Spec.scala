@@ -68,4 +68,29 @@ class GramMd5Spec extends SparkSpec {
     assert(rows(1L) == null)
     assert(rows(2L) === Seq.empty[String])
   }
+
+  test("null elements: each window joins its non-null tokens, as the staged form does") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261017L)
+    val words = Seq("the", "é", "zz", "a", "Q")
+    val k = 3
+    val crafted = Seq(
+      Seq(None, None, None),
+      Seq(Some("a"), None, None, Some("b")),
+      Seq(None, Some("a"), Some("b"), Some("c"), None))
+    val cases = (crafted ++ (1 to 300).map { _ =>
+      (0 until (k + rnd.nextInt(10))).map(_ =>
+        if (rnd.nextInt(3) == 0) None else Some(words(rnd.nextInt(words.length))))
+    }).zipWithIndex.map { case (w, i) => (i.toLong, w) }
+    val df = cases.toDF("doc_id", "w")
+    assert(df.schema("w").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, true))
+    val both = df.select(col("doc_id"),
+      GramMd5.of(col("w"), k).as("kg"),
+      staged(col("w"), k).as("sg"))
+    assert(both.where(col("kg") =!= col("sg")).count() === 0)
+    // an all-null window digests the empty string
+    val allNull = both.where(col("doc_id") === 0).collect()(0).getSeq[String](1)
+    assert(allNull === Seq(org.apache.commons.codec.digest.DigestUtils.md5Hex("")))
+  }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
 /** Plan-shape assertions for the claims COVERAGE.md makes: filters and
   * projections reach the parquet scan, top-k avoids global sorts, and
   * dimension joins broadcast.
@@ -34,22 +37,26 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  /** The map side of a word-count plan is the fused kernel alone:
+  private def executed(name: String) =
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+
+  private def children(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case other => other.children
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+
+  /** The map side of `wc_doc_tokens` is the fused kernel alone:
     * `word_tokens` evaluated once, no `normalize_word`, and no Filter
     * between the Generate and the partial aggregate above it (a filter
     * there is how the staged form came to normalize each token 3 times).
     */
   private def assertFusedMapSide(name: String): Unit = {
-    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import graft.functions.{NormalizeWord, WordTokens}
-    val root = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-    def children(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case other => other.children
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    val root = executed(name)
     def pathTo(p: SparkPlan)(hit: SparkPlan => Boolean): Option[Seq[SparkPlan]] =
       if (hit(p)) Some(Seq(p))
       else children(p).iterator.map(pathTo(_)(hit)).collectFirst { case Some(t) => p +: t }
@@ -67,12 +74,40 @@ class PlanShapeSpec extends SparkSpec {
       s"$name: Filter between the Generate and the partial aggregate:\n$root")
   }
 
+  /** The map side of `WordCount.count` is the counting kernel alone:
+    * `word_counts` evaluated once, no `word_tokens` or `normalize_word`,
+    * and one REPARTITION_BY_NUM exchange into the session's shuffle
+    * partitions with no aggregate beneath it (the kernel's table is the
+    * combiner, and AQE does not coalesce that origin into one reducer).
+    */
+  private def assertCountingMapSide(name: String): Unit = {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.functions.{NormalizeWord, WordCounts, WordTokens}
+    val root = executed(name)
+    val exprs = nodes(root).flatMap(_.expressions)
+    assert(exprs.map(_.collect { case w: WordCounts => w }.size).sum == 1,
+      s"$name must evaluate word_counts exactly once:\n$root")
+    assert(exprs.forall(_.find(e =>
+        e.isInstanceOf[WordTokens] || e.isInstanceOf[NormalizeWord]).isEmpty),
+      s"$name must not run word_tokens or normalize_word:\n$root")
+    val byNum = nodes(root).collect {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_NUM => s
+    }
+    assert(byNum.size == 1, s"$name: expected one REPARTITION_BY_NUM exchange:\n$root")
+    assert(byNum.head.outputPartitioning.numPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"$name: the exchange must use the session's shuffle partitions:\n$root")
+    assert(!nodes(byNum.head).exists(_.isInstanceOf[HashAggregateExec]),
+      s"$name: no aggregate may run beneath the exchange:\n$root")
+  }
+
   test("wc: exactly one hash-partition exchange keyed on word pre-sort") {
     val df = SparkEntry.queries("wc_word_count")(spark, sfDir)
     val p = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning\\(word".r.findAllIn(p).size
     assert(exchanges == 1, s"expected ONE word-keyed exchange, plan:\n$p")
-    assertFusedMapSide("wc_word_count")
+    assertCountingMapSide("wc_word_count")
   }
 
   test("wc_doc_tokens: word_tokens once, no normalize_word, no Filter before the partial aggregate") {

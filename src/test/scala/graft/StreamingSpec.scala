@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.streaming.{EventStream, Session}
 
@@ -24,8 +25,13 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     val got = spark.table("wc_stream").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the word repartition already has the stateful aggregate's
+    // distribution, so the planner adds no second exchange
+    val shuffles = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan.collect { case s: ShuffleExchangeExec => s }
     q.stop()
     assert(got == Map("the" -> 2L, "quick" -> 2L, "fox" -> 2L, "..." -> 1L))
+    assert(shuffles.size == 1, shuffles.mkString("\n"))
   }
 
   test("watermarked hourly counts emit one row per (hour, type)") {

@@ -104,4 +104,16 @@ class WinnowKernelSpec extends SparkSpec {
       .collect()(0).getSeq[Long](0)
     assert(got === Seq(3L, 5L, 6L))
   }
+
+  test("an array that may hold null elements is rejected at analysis time") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val nullable = Literal.create(Seq(1L, 2L), ArrayType(LongType, containsNull = true))
+    assert(WinnowSelect(nullable, W).checkInputDataTypes().isFailure)
+    val df = Seq((1L, Seq(Some(5L), None, Some(3L)))).toDF("doc_id", "hs")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(WinnowSelect.of(col("hs"), W)).collect())
+    assert(e.getMessage.contains("winnow_select"), e.getMessage)
+  }
 }

@@ -61,4 +61,48 @@ class WordCountPropertySpec extends SparkSpec {
         .collect()(0).get(0) == (if (expected == 0) null else expected.toLong)
     }, min = 10)
   }
+
+  test("counts are invariant under partitioning and re-chunking at line boundaries (properties 2 and 4)") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.scalacheck.rng.Seed
+    import graft.functions.{WordCounts, WordCountsImpl}
+    // line breaks belong to the text reader, not to the word rule
+    val generated = Gen.listOfN(300, ByteLines.line)
+      .apply(Gen.Parameters.default, Seed(7)).getOrElse(sys.error("no sample"))
+      .map(_.filter(b => b != '\n' && b != '\r'))
+    // more distinct words than one table holds, the first 1000 repeated
+    // after it fills: a task that reads all of them emits early
+    val wide = ByteLines.wideLines(WordCountsImpl.MaxWords + 1000, 1000)
+    val lines = generated ++ wide ++ ByteLines.edges.map(_.filter(b => b != '\n' && b != '\r'))
+    def inMemory(parts: Int): DataFrame =
+      spark.createDataset(spark.sparkContext.parallelize(lines, parts))
+        .toDF("b").select(col("b").cast("string").as("value"))
+    def chunked(files: Int): DataFrame = {
+      val dir = graft.core.TempDirs.path(s"graft-rechunk-$files")
+      val rnd = new scala.util.Random(files)
+      val cuts = (0 +: rnd.shuffle((1 until lines.size).toList).take(files - 1).sorted :+ lines.size)
+      cuts.sliding(2).zipWithIndex.foreach { case (Seq(a, b), i) =>
+        val out = new java.io.ByteArrayOutputStream
+        lines.slice(a, b).foreach { l => out.write(l); out.write('\n') }
+        java.nio.file.Files.write(dir.resolve(f"$i%02d.txt"), out.toByteArray)
+      }
+      WordCount.ingest(spark, Seq(dir.toString))
+    }
+    def counted(df: DataFrame): DataFrame =
+      WordCount.count(df).select(hex(col("word")).as("w"), col("count"))
+    val one = counted(inMemory(1)).cache()
+    try {
+      // the single task really did fill its table (no test-only cap)
+      val emitted = inMemory(1).select(WordCounts.of(col("value"))).count()
+      assert(emitted > one.count(), "one task over the cap must emit early")
+      val total = one.agg(sum("count")).as[Long].head()
+      Seq(inMemory(3), inMemory(8), chunked(1), chunked(3), chunked(8)).foreach { df =>
+        val other = counted(df)
+        assert(other.exceptAll(one).isEmpty && one.exceptAll(other).isEmpty)
+        assert(other.agg(sum("count")).as[Long].head() == total)
+      }
+    } finally one.unpersist()
+  }
 }

@@ -12,6 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
+import graft.ByteLines.{ascii, edges, hexOf, line}
 import graft.core.WordCount
 import graft.functions.{ByteSplit, ByteSplitImpl, NormalizeWordImpl, WordTokens, WordTokensImpl}
 
@@ -22,33 +23,6 @@ import graft.functions.{ByteSplit, ByteSplitImpl, NormalizeWordImpl, WordTokens,
   */
 class WordTokensSpec extends SparkSpec {
 
-  private def ascii(s: String): Array[Byte] = s.getBytes(US_ASCII)
-  private def letters(n: Int): Gen[Array[Byte]] =
-    Gen.listOfN(n, Gen.alphaChar).map(cs => ascii(cs.mkString))
-
-  /** Pieces concatenated without separators, so adjacent ones merge
-    * into tokens with punctuation, high bytes or a BOM at either end.
-    */
-  private val piece: Gen[Array[Byte]] = Gen.frequency(
-    6 -> Gen.choose(1, 12).flatMap(letters),
-    2 -> Gen.oneOf(70, 71, 72).flatMap(letters),
-    1 -> Gen.oneOf(70, 71, 72).map(n => Array.fill(n)('.'.toByte)),
-    3 -> Gen.choose(1, 3).map(n => Array.fill(n)(' '.toByte)),
-    2 -> Gen.oneOf("(", ").", "'", "--", "...", "1871", "\t", "\r", "\r\n").map(ascii),
-    2 -> Gen.choose(0x80, 0xFF).map(b => Array(b.toByte)),
-    1 -> Gen.const(Array(0xEF, 0xBB, 0xBF).map(_.toByte)),
-    1 -> Gen.choose(0, 0xFF).map(b => Array(b.toByte)))
-
-  private val line: Gen[Array[Byte]] = Gen.frequency(
-    1 -> Gen.const(Array.emptyByteArray),
-    12 -> Gen.listOf(piece).map(_.toArray.flatten))
-
-  private val edges: Seq[Array[Byte]] = Seq("", " ", "   ", " a", "a ", "  a  b  ",
-    "...", "(The) QUICK, brown", "\uFEFFProject Gutenberg\r", "a\tb c\rd",
-    "x" * 70, "x" * 71, "(" + "x" * 70 + ")", "(" + "x" * 71 + ")", "." * 70, "." * 71)
-    .map(_.getBytes("UTF-8")) :+ Array(0xE9, 0x20, 0x63, 0x61, 0x66, 0xE9).map(_.toByte)
-
-  private def hexOf(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString
   private def hexes(a: ArrayData): Seq[String] =
     (0 until a.numElements()).map(i => hexOf(a.getUTF8String(i).getBytes))
 
