@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.core.Staged
 
@@ -29,8 +32,20 @@ import graft.core.Staged
   * caches cleared between passes, min reported).
   *
   * Usage: runMain graft.ScaleStudy <sfDir> [passes]
-  *   [embed_lsh|semdedup|semdedup_sampled|semdedup_capped|ivfpq|ivfpq_sampled|recall|annroute|bpe_merges|rowops|r7ops|r7ops2|lenctl|streaming|stream_shapes|wc|knn_join|knn_join_capped|contam_embed|formats]
+  *   [embed_lsh|semdedup|semdedup_sampled|semdedup_capped|ivfpq|ivfpq_sampled|recall|annroute|bpe_merges|streaming|stream_shapes|wc|knn_join|knn_join_capped|contam_embed|formats]
   * Prints one JSON line; never run concurrently with Bench.
+  *
+  * Studies that only time declared queries are [[Profile]] runs, whose
+  * `min` and `samples` follow the same discipline:
+  *   - per-row and constant-state document operators (was `rowops`):
+  *     `runMain graft.Profile <sfDir> ta_winnow,ta_heavy_hitters,ta_hll_distinct,ta_chunk 3`;
+  *   - cap-bounded and constant-model operators (was `r7ops`):
+  *     `runMain graft.Profile <sfDir> dd_winnow_pairs,dd_span_cut,ta_bloom,ta_bpe_train,sim_ivfpq_rerank 3`;
+  *   - corpus-scale graph and scoring (was `r7ops2`):
+  *     `runMain graft.Profile <sfDir> dd_pagerank,ta_dsir 3`;
+  *   - the length-controlled re-run (was `lenctl`), pointed at a
+  *     `tools/upscale_diverse.py` "perm" corpus:
+  *     `runMain graft.Profile <sfDir> ta_winnow,dd_winnow_pairs,ta_hll_distinct 3`.
   *
   * `semdedup_sampled` / `ivfpq_sampled` are the rule paths with
   * training capped at [[graft.queries.Similarity.TrainSamplePerCell]]·k
@@ -43,6 +58,44 @@ import graft.core.Staged
   * study cannot make.
   */
 object ScaleStudy {
+
+  /** Clone of `spark` on the RocksDB provider that keeps 2000 batches
+    * of progress (the default keeps 100).
+    */
+  private def rocksDbStudySession(spark: SparkSession): SparkSession = {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      graft.queries.StreamingQueries.RocksDbProvider)
+    s2.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
+    s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s2
+  }
+
+  /** Start `writer` on a new checkpoint, drain it, and summarize its
+    * progress as JSON fields: input events, batches that read input,
+    * drain wall, events/s, and the first state operator's row count
+    * (max and last) and memory (max).
+    */
+  private def drainStats(writer: DataStreamWriter[_]): String = {
+    val chk = Files.createTempDirectory("graft_stream_chk_").toString
+    val q = writer.option("checkpointLocation", chk).start()
+    val t0 = System.nanoTime()
+    q.processAllAvailable()
+    val wall = (System.nanoTime() - t0) / 1e9
+    val progs = q.recentProgress.toSeq
+    q.stop()
+    val inputRows = progs.map(_.numInputRows)
+    val state = progs.flatMap(_.stateOperators.headOption)
+    val stateRows = state.map(_.numRowsTotal)
+    val stateMem = state.map(_.memoryUsedBytes)
+    val events = inputRows.sum
+    s""""events":$events,"batches":${inputRows.count(_ > 0)},"wall_sec":$wall,""" +
+      s""""events_per_sec":${(events / wall).toLong},""" +
+      s""""state_rows_max":${if (stateRows.isEmpty) 0 else stateRows.max},""" +
+      s""""state_rows_last":${stateRows.lastOption.getOrElse(0L)},""" +
+      s""""state_mem_max_bytes":${if (stateMem.isEmpty) 0 else stateMem.max}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
@@ -55,62 +108,6 @@ object ScaleStudy {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // "rowops": the per-row / constant-state-aggregate document
-    // operators (winnowing, CMS, HLL, chunking) — no sizing rule to
-    // resolve (their state is constant or per-doc-bounded by design);
-    // the study exists to MEASURE the claimed linearity across the
-    // same three diverse decades the candidate-join families use.
-    // One JVM, each query timed separately with Bench's discipline.
-    // "r7ops": the cap-bounded / constant-model round-7 additions —
-    // dd_winnow_pairs (WinnowPostingCap-bounded inverted-index join:
-    // candidate volume O(n·cap) BY CONSTRUCTION, no n-adaptive rule
-    // to resolve), dd_span_cut (gram-keyed join + in-row cut),
-    // ta_bloom (fixed 256-bit state), ta_bpe_train (rounds run on the
-    // distinct-WORD table, not the corpus), sim_ivfpq_rerank (sampled
-    // training + O(queries × R) exact pass). Same measurement-only
-    // contract as "rowops".
-    // "r7ops2": the late-round-7 corpus-scale pair — dd_pagerank
-    // (minhash pair derivation + 3 bounded Pregel rounds; graph size
-    // is linear in n under the diverse upscale because duplication
-    // stays per-replica) and ta_dsir (one bigram fan-out + two B-row
-    // models + broadcast scoring — claimed scan-speed).
-    // "lenctl": the length-controlled re-run of the three queries whose
-    // first-decade ratios under the PREFIX upscale ran hot (7.4x/7.2x
-    // winnow family, hll) — point it at a tools/upscale_diverse.py
-    // "perm" corpus (replica-permuted alphabet, byte lengths UNCHANGED)
-    // to separate md5-input-growth from genuine n-scaling.
-    if (study == "rowops" || study == "r7ops" || study == "r7ops2" ||
-        study == "lenctl") {
-      val names = study match {
-        case "rowops" =>
-          Seq("ta_winnow", "ta_heavy_hitters", "ta_hll_distinct", "ta_chunk")
-        case "r7ops" =>
-          Seq("dd_winnow_pairs", "dd_span_cut", "ta_bloom", "ta_bpe_train",
-            "sim_ivfpq_rerank")
-        case "lenctl" =>
-          Seq("ta_winnow", "dd_winnow_pairs", "ta_hll_distinct")
-        case _ => Seq("dd_pagerank", "ta_dsir")
-      }
-      val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
-      def once(name: String): Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        elapsed
-      }
-      val results = names.map { name =>
-        once(name) // warm-up, untimed
-        val samples = (1 to passes).map(_ => once(name))
-        s""""$name":{"samples":[${samples.mkString(",")}],"min":${samples.min}}"""
-      }
-      spark.stop()
-      println(s"""{"metric":"$study","n":$nDocs,""" +
-        results.mkString("", ",", ",") + s""""sf":"$sfDir"}""")
-      return
-    }
 
     // "bpe_merges": sequential vs batched BPE training at a
     // production-shaped merge budget (256). The sequential trainer is
@@ -173,57 +170,21 @@ object ScaleStudy {
     if (study == "streaming") {
       import org.apache.spark.sql.functions._
       val rep = sys.env.get("SPARK_GRAFT_STREAM_REP").map(_.toInt).getOrElse(10)
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        graft.queries.StreamingQueries.RocksDbProvider)
-      s2.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val s2 = rocksDbStudySession(spark)
       val ev = graft.sources.Tables(s2, sfDir).events
         .transform(graft.sources.Tables.normalizeEventTs)
         .select(col("ts"), col("user_id"), col("event_type"))
-      val src = java.nio.file.Files
-        .createTempDirectory("graft_stream_src_").toString
-      (0 until rep).foreach { i =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_stream_stage_").toString
-        ev.withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 32} DAYS"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(src, f"chunk-$i%04d.parquet"))
-      }
+      val src = graft.queries.StreamingQueries.stagePhases(s2, "scale_streaming",
+        (0 until rep).map(i => ev.withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 32} DAYS"))))
       val schema = s2.read.parquet(src).schema
-      val chk = java.nio.file.Files
-        .createTempDirectory("graft_stream_chk_").toString
-      val q = s2.readStream.schema(schema)
+      val stats = drainStats(s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-        .writeStream.format("noop").outputMode("update")
-        .option("checkpointLocation", chk)
-        .start()
-      val t0 = System.nanoTime()
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val progs = q.recentProgress.toSeq
-      q.stop()
-      def longs(re: scala.util.matching.Regex): Seq[Long] =
-        progs.flatMap(p => re.findFirstMatchIn(p.json).map(_.group(1).toLong))
-      val inputRows = longs(""""numInputRows"\s*:\s*(\d+)""".r)
-      val stateRows = longs(""""numRowsTotal"\s*:\s*(\d+)""".r)
-      val stateMem = longs(""""memoryUsedBytes"\s*:\s*(\d+)""".r)
-      val events = inputRows.sum
+        .writeStream.format("noop").outputMode("update"))
       spark.stop()
-      println(s"""{"metric":"stream_throughput","rep":$rep,""" +
-        s""""events":$events,"batches":${inputRows.count(_ > 0)},""" +
-        s""""wall_sec":$wall,""" +
-        s""""events_per_sec":${(events / wall).toLong},""" +
-        s""""state_rows_max":${if (stateRows.isEmpty) 0 else stateRows.max},""" +
-        s""""state_rows_last":${stateRows.lastOption.getOrElse(0L)},""" +
-        s""""state_mem_max_bytes":${if (stateMem.isEmpty) 0 else stateMem.max},""" +
-        s""""sf":"$sfDir"}""")
+      println(s"""{"metric":"stream_throughput","rep":$rep,$stats,"sf":"$sfDir"}""")
       return
     }
 
@@ -249,27 +210,13 @@ object ScaleStudy {
     if (study == "stream_shapes") {
       import org.apache.spark.sql.functions._
       val rep = sys.env.get("SPARK_GRAFT_STREAM_REP").map(_.toInt).getOrElse(10)
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        graft.queries.StreamingQueries.RocksDbProvider)
-      s2.conf.set("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val s2 = rocksDbStudySession(spark)
       val ev = graft.sources.Tables(s2, sfDir).events
         .transform(graft.sources.Tables.normalizeEventTs)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val src = java.nio.file.Files
-        .createTempDirectory("graft_shapes_src_").toString
-      (0 until rep).foreach { i =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_shapes_stage_").toString
-        ev.withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 32} DAYS"))
-          .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(src, f"chunk-$i%04d.parquet"))
-      }
+      val src = graft.queries.StreamingQueries.stagePhases(s2, "scale_shapes_events",
+        (0 until rep).map(i => ev.withColumn("ts", col("ts") + expr(s"INTERVAL ${i * 32} DAYS"))
+          .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))))
       // docs chunks for the "lsh" shape: rep copies of the documents
       // table, each +32 days on the synthetic ingest clock (60 s/doc,
       // as st_lsh_dedup) with chunk-unique doc_ids but IDENTICAL text —
@@ -281,23 +228,13 @@ object ScaleStudy {
       val lshT0 = 1700000000L
       val docs = graft.sources.Tables(s2, sfDir).documents
         .select(col("doc_id"), col("text"))
-      val dsrc = java.nio.file.Files
-        .createTempDirectory("graft_shapes_docsrc_").toString
-      (0 until rep).foreach { i =>
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_shapes_docstage_").toString
-        docs.select(
-            (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-            col("text"),
-            timestamp_seconds(lit(lshT0 + i.toLong * 32L * 86400L)
-              + col("doc_id") * 60L).as("ts"),
-            lit(i).as("phase"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          java.nio.file.Paths.get(dsrc, f"chunk-$i%04d.parquet"))
-      }
+      val dsrc = graft.queries.StreamingQueries.stagePhases(s2, "scale_shapes_docs",
+        (0 until rep).map(i => docs.select(
+          (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
+          col("text"),
+          timestamp_seconds(lit(lshT0 + i.toLong * 32L * 86400L)
+            + col("doc_id") * 60L).as("ts"),
+          lit(i).as("phase"))))
       val schema = s2.read.parquet(src).schema
       def rd() = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -384,30 +321,9 @@ object ScaleStudy {
             .toDF()
       }
       val results = Seq("join", "dedup", "lsh", "tws", "pipeline").map { shape =>
-        val chk = java.nio.file.Files
-          .createTempDirectory(s"graft_shapes_chk_${shape}_").toString
-        val q = shaped(shape).writeStream.format("noop")
-          .outputMode("append")
-          .option("checkpointLocation", chk)
-          .start()
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val progs = q.recentProgress.toSeq
-        q.stop()
-        def longs(re: scala.util.matching.Regex): Seq[Long] =
-          progs.flatMap(p => re.findFirstMatchIn(p.json).map(_.group(1).toLong))
-        val inputRows = longs(""""numInputRows"\s*:\s*(\d+)""".r)
-        val stateRows = longs(""""numRowsTotal"\s*:\s*(\d+)""".r)
-        val stateMem = longs(""""memoryUsedBytes"\s*:\s*(\d+)""".r)
-        val events = inputRows.sum
-        s""""$shape":{"events":$events,""" +
-          s""""batches":${inputRows.count(_ > 0)},"wall_sec":$wall,""" +
-          s""""events_per_sec":${(events / wall).toLong},""" +
-          s""""state_rows_max":${if (stateRows.isEmpty) 0 else stateRows.max},""" +
-          s""""state_rows_last":${stateRows.lastOption.getOrElse(0L)},""" +
-          s""""state_mem_max_bytes":${
-            if (stateMem.isEmpty) 0 else stateMem.max}}"""
+        val stats = drainStats(shaped(shape).writeStream.format("noop")
+          .outputMode("append"))
+        s""""$shape":{$stats}"""
       }
       spark.stop()
       println(s"""{"metric":"stream_shapes","rep":$rep,""" +
@@ -965,9 +881,8 @@ object ScaleStudy {
             .write.format("noop").mode("overwrite").save())
       case other =>
         sys.error(s"unknown study '$other' (embed_lsh|semdedup|semdedup_sampled|" +
-          "semdedup_capped|ivfpq|ivfpq_sampled|recall|bpe_merges|rowops|r7ops|" +
-          "r7ops2|lenctl|streaming|stream_shapes|wc|knn_join|knn_join_capped|" +
-          "contam_embed|formats)")
+          "semdedup_capped|ivfpq|ivfpq_sampled|recall|bpe_merges|streaming|" +
+          "stream_shapes|wc|knn_join|knn_join_capped|contam_embed|formats)")
     }
     def once(): Double = {
       val t0 = System.nanoTime()

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.streaming.EventStream
 import graft.QueryModule
@@ -70,7 +71,7 @@ object StreamingQueries extends QueryModule {
     * phase N+1's arrivals are processed strictly after phase N's
     * watermark took effect — no file-ordering race.
     */
-  private def stagePhases(s: SparkSession, name: String, phases: Seq[DataFrame]): String = {
+  private[graft] def stagePhases(s: SparkSession, name: String, phases: Seq[DataFrame]): String = {
     val srcDir = freshDir(s"$name/src")
     phases.zipWithIndex.foreach { case (df, i) =>
       val scratch = freshDir(s"$name/stage$i")
@@ -91,15 +92,22 @@ object StreamingQueries extends QueryModule {
     srcDir
   }
 
+  /** Start `writer` on a fresh checkpoint under `name`, process all
+    * available input, and stop — in `finally`, so a failed batch never
+    * leaves the query running.
+    */
+  private def drain(writer: DataStreamWriter[_], name: String): Unit = {
+    val q = writer.option("checkpointLocation", freshDir(s"$name/chk")).start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
   /** Start `agg` in Complete mode into a memory sink, drain all available
     * input, stop, and return the sink table. Complete mode keeps the full
     * aggregate state, so the final table equals the batch aggregate — the
     * watermark still runs but evicts nothing the comparison needs.
     */
   private def runToCompletion(s: SparkSession, agg: DataFrame, sink: String): DataFrame = {
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
+    drain(agg.writeStream.format("memory").queryName(sink).outputMode("complete"), sink)
     s.table(sink)
   }
 
@@ -204,12 +212,6 @@ object StreamingQueries extends QueryModule {
   def stJoinRocksDb(s: SparkSession, dir: String): DataFrame =
     stJoinCore(s, dir, "st_join_rocksdb", rocksDb = true)
 
-  /** Progress JSON of the most recent [[stJoinCore]] run, for
-    * StreamingSpec's provider assertion (same contract as
-    * [[lastDedupProgress]]).
-    */
-  @volatile private[graft] var lastJoinProgress: Seq[String] = Nil
-
   private def stJoinCore(s0: SparkSession, dir: String, name: String,
       rocksDb: Boolean): DataFrame = {
     // Isolated session for the provider override — same reasoning as
@@ -249,17 +251,10 @@ object StreamingQueries extends QueryModule {
         col("c_ts") >= col("e_ts") - expr("INTERVAL 5 MINUTES") &&
         col("c_ts") <= col("e_ts") + expr("INTERVAL 5 MINUTES"))
     val out = freshDir(s"$name/out")
-    val chk = freshDir(s"$name/chk")
-    val q = joined.select("error_id", "user_id").writeStream
+    drain(joined.select("error_id", "user_id").writeStream
       .format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      lastJoinProgress = q.recentProgress.toSeq.map(_.json)
-    } finally q.stop()
+      .outputMode("append"), name)
     s.read.parquet(out)
       .groupBy("error_id", "user_id")
       .agg(count(lit(1)).as("n_nearby_clicks"))
@@ -287,14 +282,10 @@ object StreamingQueries extends QueryModule {
     val ev = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
       .transform(graft.sources.Tables.normalizeEventTs)
     val out = freshDir("st_hourly_append/out")
-    val chk = freshDir("st_hourly_append/chk")
-    val q = EventStream.hourlyCounts(ev).writeStream
+    drain(EventStream.hourlyCounts(ev).writeStream
       .format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .outputMode("append"), "st_hourly_append")
     s.read.parquet(out)
       .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n_events"),
@@ -312,12 +303,6 @@ object StreamingQueries extends QueryModule {
     * hash-equal the batch word count. Per-trigger output is
     * O(changed keys), driver holds nothing.
     */
-  /** Progress JSON of the most recent [[stWcUpdate]] run, for
-    * StreamProbe's per-batch cost decomposition (same contract as
-    * [[lastJoinProgress]]).
-    */
-  @volatile private[graft] var lastWcProgress: Seq[String] = Nil
-
   def stWcUpdate(s: SparkSession, dir: String): DataFrame = {
     val srcDir = freshDir("st_wc_update/src")
     s.read.parquet(s"$dir/documents.parquet")
@@ -325,25 +310,18 @@ object StreamingQueries extends QueryModule {
       .repartition(8)
       .write.mode("overwrite").parquet(srcDir)
     val deltaDir = freshDir("st_wc_update/delta")
-    val chk = freshDir("st_wc_update/chk")
     val lines = s.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(
           "value", org.apache.spark.sql.types.StringType))))
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    val q = EventStream.wordCount(lines).writeStream
+    drain(EventStream.wordCount(lines).writeStream
       .outputMode("update")
-      .option("checkpointLocation", chk)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(deltaDir)
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      lastWcProgress = q.recentProgress.toSeq.map(_.json)
-    } finally q.stop()
+      }, "st_wc_update")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("word").orderBy(col("batch_id").desc)
     s.read.parquet(deltaDir)
@@ -398,10 +376,9 @@ object StreamingQueries extends QueryModule {
     val ev = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
       .transform(graft.sources.Tables.normalizeEventTs)
       .select(col("user_id"), col("ts")).as[graft.streaming.UserEvent]
-    val q = EventStream.sessionize(s, ev, gapMinutes = 30).toDF()
+    drain(EventStream.sessionize(s, ev, gapMinutes = 30).toDF()
       .writeStream.format("memory").queryName("st_sessionize_sink")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+      .outputMode("append"), "st_sessionize")
     s.table("st_sessionize_sink")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
@@ -477,7 +454,7 @@ object StreamingQueries extends QueryModule {
       "true")
     // Stream-stream join state format v3 (Spark 4): ONE RocksDB store
     // with virtual column families instead of FOUR stores per
-    // partition — the StreamProbe decomposition shows join-state
+    // partition — per-batch progress (graft.Profile) shows join-state
     // commit cost is per-store FIXED (a 55-row state commit costs the
     // same as 40k rows), so quartering the store count quarters the
     // per-batch commit overhead at any scale. RocksDB-only (the heap
@@ -487,13 +464,6 @@ object StreamingQueries extends QueryModule {
     ns.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
     ns
   }
-
-  /** Progress JSON of the most recent [[stDedupCore]] run, for
-    * StreamingSpec's the-provider-was-actually-used assertion (the
-    * per-batch progress names the state store's custom metrics, which
-    * are provider-specific: `rocksdb*` keys only under RocksDB).
-    */
-  @volatile private[graft] var lastDedupProgress: Seq[String] = Nil
 
   private def stDedupCore(s: SparkSession, dir: String, name: String,
       rocksDb: Boolean): DataFrame = {
@@ -517,22 +487,15 @@ object StreamingQueries extends QueryModule {
     val rearrivals = withMax.where(evicted || retained)
       .select(col("event_id"), col("tmax").as("ts"), col("event_type"), col("value"))
     val srcDir = stagePhases(ss, name, Seq(ev, advancer, rearrivals))
-    val chk = freshDir(s"$name/chk")
     val out = freshDir(s"$name/out")
     val deduped = ss.readStream
       .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE")
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = deduped.writeStream.format("parquet")
+    drain(deduped.writeStream.format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      lastDedupProgress = q.recentProgress.toSeq.map(_.json)
-    } finally q.stop()
+      .outputMode("append"), name)
     ss.read.parquet(out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -569,25 +532,15 @@ object StreamingQueries extends QueryModule {
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
     val out = freshDir("st_session_window/out")
-    val chk = freshDir("st_session_window/chk")
-    val q = agg.writeStream.format("parquet")
+    drain(agg.writeStream.format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .outputMode("append"), "st_session_window")
     s.read.parquet(out)
       .select(col("user_id"),
         date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("s_start"),
         col("n_events"))
       .orderBy("user_id", "s_start")
   }
-
-  /** Progress JSON of the most recent [[stTwsCount]] run, for
-    * StreamingSpec's the-new-API-actually-ran assertion (the state
-    * operator name in progress is transformWithState-specific).
-    */
-  @volatile private[graft] var lastTwsProgress: Seq[String] = Nil
 
   /** Spark 4.x ARBITRARY STATE V2 — `transformWithState` with a typed
     * `ValueState` ([[graft.streaming.TwsCounter]]), the API that
@@ -621,7 +574,6 @@ object StreamingQueries extends QueryModule {
     val phases = (0 until 3).map(p =>
       ev.where(col("event_id") % 3 === p).select(col("user_id"), col("cents")))
     val srcDir = stagePhases(s, "st_tws_count", phases)
-    val chk = freshDir("st_tws_count/chk")
     val out = freshDir("st_tws_count/out")
     val counted = s.readStream
       .schema("user_id BIGINT, cents BIGINT")
@@ -630,15 +582,9 @@ object StreamingQueries extends QueryModule {
       .groupByKey(_.user_id)
       .transformWithState(new graft.streaming.TwsCounter,
         TimeMode.None(), OutputMode.Append())
-    val q = counted.toDF().writeStream.format("parquet")
+    drain(counted.toDF().writeStream.format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      lastTwsProgress = q.recentProgress.toSeq.map(_.json)
-    } finally q.stop()
+      .outputMode("append"), "st_tws_count")
     // (user_id, n_total) is unique: totals strictly grow per emission
     s.read.parquet(out).orderBy("user_id", "n_total")
   }
@@ -652,11 +598,6 @@ object StreamingQueries extends QueryModule {
     */
   private[graft] val TwsTtlMs = 15000L
   private[graft] val TwsTtlSleepMs = 23000L
-
-  /** Progress JSON of the most recent [[stTwsTtl]] run (same contract
-    * as [[lastTwsProgress]]).
-    */
-  @volatile private[graft] var lastTtlProgress: Seq[String] = Nil
 
   /** [[stTwsCount]] with a FINITE state TTL — the retention bound that
     * makes transformWithState deployable on an unbounded keyspace (at
@@ -739,7 +680,6 @@ object StreamingQueries extends QueryModule {
           Thread.sleep(200)
         require(sunk() >= expectRows,
           s"st_tws_ttl: sink stuck below $expectRows rows")
-        lastTtlProgress = q.recentProgress.toSeq.map(_.json)
       } finally q.stop()
     }
     // the live-phase gate depends on wall-clock scheduling: phases 0–1
@@ -793,13 +733,9 @@ object StreamingQueries extends QueryModule {
       .transformWithState(new graft.streaming.TwsSessionizer(30),
         TimeMode.EventTime(), OutputMode.Append())
     val out = freshDir("st_tws_session/out")
-    val chk = freshDir("st_tws_session/chk")
-    val q = sessions.toDF().writeStream.format("parquet")
+    drain(sessions.toDF().writeStream.format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .outputMode("append"), "st_tws_session")
     s.read.parquet(out)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
@@ -815,12 +751,6 @@ object StreamingQueries extends QueryModule {
   private val LshT0 = 1700000000L
   private val LshSpacingSec = 60L
   private val LshHorizonMs = 3600L * 1000L
-
-  /** Progress JSON of the most recent [[stLshDedup]] run, for
-    * StreamingSpec's provider assertion (same contract as
-    * [[lastTwsProgress]]).
-    */
-  @volatile private[graft] var lastLshProgress: Seq[String] = Nil
 
   /** Streaming NEAR-DUPLICATE ADMISSION — the LLM-pipeline state shape
     * none of the other `st_*` rows reach: documents arrive as a stream,
@@ -906,16 +836,9 @@ object StreamingQueries extends QueryModule {
       .transformWithState(new graft.streaming.LshAdmitter(LshHorizonMs),
         TimeMode.EventTime(), OutputMode.Append())
     val out = freshDir("st_lsh_dedup/out")
-    val chk = freshDir("st_lsh_dedup/chk")
-    val q = admitted.toDF().writeStream.format("parquet")
+    drain(admitted.toDF().writeStream.format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      lastLshProgress = q.recentProgress.toSeq.map(_.json)
-    } finally q.stop()
+      .outputMode("append"), "st_lsh_dedup")
     s.read.parquet(out)
       .groupBy("phase", "doc_id")
       .agg(count(lit(1)).cast("int").as("n_bands"),
@@ -969,12 +892,6 @@ object StreamingQueries extends QueryModule {
         round(col("n_hit").cast("double") / col("n_sh"), 6).as("contam_ratio"))
       .orderBy("doc_id")
   }
-
-  /** Progress JSON of the most recent [[stPipeline]] run, for
-    * StreamingSpec's provider assertion (same contract as
-    * [[lastLshProgress]]).
-    */
-  @volatile private[graft] var lastPipeProgress: Seq[String] = Nil
 
   /** One-row broadcast frame carrying the eval suite's screen
     * artifacts for the ingest pipeline: `eval_sh` = the held-out
@@ -1161,16 +1078,9 @@ object StreamingQueries extends QueryModule {
       .where(col("doc_id") >= 0)
     val verdicts = pipelineVerdicts(s, src, pipelineScreens(s, dir))
     val out = freshDir("st_pipeline/out")
-    val chk = freshDir("st_pipeline/chk")
-    val q = verdicts.toDF().writeStream.format("parquet")
+    drain(verdicts.toDF().writeStream.format("parquet")
       .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      lastPipeProgress = q.recentProgress.toSeq.map(_.json)
-    } finally q.stop()
+      .outputMode("append"), "st_pipeline")
     // fold each arrival's band verdicts into its one manifest row —
     // every DECISION below was made in the stream (the screen flags and
     // per-band collisions ride each sink row); this is assembly, with
@@ -1255,11 +1165,9 @@ object StreamingQueries extends QueryModule {
       .write.mode("overwrite").parquet(targetDir)
     var nBatches = 0
     val schema = s.read.parquet(srcDir).schema
-    val chk = freshDir("st_merge_cdc/chk")
-    val q = s.readStream.schema(schema)
+    drain(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
-      .option("checkpointLocation", chk)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cur = s.read.parquet(targetDir)
         val next = cur.unionByName(
@@ -1274,9 +1182,7 @@ object StreamingQueries extends QueryModule {
         next.write.mode("overwrite").parquet(nd)
         targetDir = nd
         nBatches += 1
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      }, "st_merge_cdc")
     require(nBatches >= 2,
       s"batch-boundary invariance needs multiple batches, got $nBatches")
     // audit = q62's, over the converged state: deletes/keeps report the

@@ -2,7 +2,8 @@
  * Bridge into Spark's private[sql] Column internals, placed inside the
  * org.apache.spark.sql package — the standard technique for Spark
  * extension libraries that define custom Catalyst Expressions and need
- * Expression <-> Column conversion under Spark 4's ColumnNode API.
+ * Expression <-> Column conversion under Spark 4's ColumnNode API. It is
+ * also the one home for the engine's other Spark-private access.
  */
 package org.apache.spark.sql.graft
 
@@ -29,4 +30,10 @@ object Bridge {
     classic.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, exprs => builder(exprs.head), "built-in")
   }
+
+  /** Block until every event posted to the context's listener bus so far
+    * has been delivered, so a listener's counts are complete when read.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -17,6 +17,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * ContextCleaner's next GC.
     */
   def cachedEntries: Int = org.apache.spark.sql.CacheEntries.count(spark)
+
+  /** Fail with one line naming `path` when it is absent, instead of
+    * Spark's PATH_NOT_FOUND stack trace. A path whose last segment is a
+    * glob is checked as its directory.
+    */
+  def requireCorpus(path: String)(implicit pos: org.scalactic.source.Position): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    val target = if (p.getFileName.toString.contains("*")) p.getParent else p
+    if (!java.nio.file.Files.exists(target)) fail(s"test corpus absent: $target does not exist")
+  }
 }
 
 object SparkSpec {

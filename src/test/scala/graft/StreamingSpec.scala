@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.streaming.{EventStream, Session}
@@ -13,6 +17,34 @@ class StreamingSpec extends SparkSpec {
 
   private def ckpt(): String =
     graft.core.TempDirs.create("graft-ckpt")
+
+  /** Run `body` with a listener on the session's context, and return its
+    * result with the progress JSON of every state operator the streams
+    * it started reported: operator names and the provider's custom
+    * metrics (`rocksdb*` keys only under RocksDB). The listener also
+    * sees streams started on cloned sessions. Source and sink
+    * descriptions are left out: their paths carry the fixture's name
+    * (`st_dedup_rocksdb/out`), which would pass a "rocksdb" check on
+    * any provider.
+    */
+  private def progressDuring[A](body: => A): (A, String) = {
+    val sc = spark.sparkContext
+    val states = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          p.progress.stateOperators.foreach(op => states.add(op.json))
+        case _ =>
+      }
+    }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      Bridge.drainListenerBus(sc)
+      (out, states.asScala.mkString("\n"))
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("streaming word count matches batch on the same lines") {
     import spark.implicits._
@@ -57,6 +89,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source streaming word count over reference chunks") {
     import org.apache.spark.sql.functions.col
+    (0 to 2).foreach(i => requireCorpus(s"/root/reference/file_chunks/$i.txt"))
     val dir = graft.core.TempDirs.path("graft-stream-in")
     // seed with two real corpus chunks; the stream picks them up as files
     for (i <- 0 to 1) {
@@ -311,21 +344,20 @@ class StreamingSpec extends SparkSpec {
     // Default provider first: progress must NOT carry rocksdb metrics —
     // this also proves the RocksDB conf stays scoped to its own session
     // (st_dedup after st_dedup_rocksdb would otherwise inherit it).
-    val heap = StreamingQueries.stDedup(spark, dir).collect().toSeq
-    val heapProgress = StreamingQueries.lastDedupProgress.mkString("\n")
+    val (heap, heapProgress) = progressDuring(StreamingQueries.stDedup(spark, dir).collect().toSeq)
     assert(heapProgress.nonEmpty && !heapProgress.contains("rocksdb"),
       "default provider run must not report RocksDB custom metrics")
-    val rocks = StreamingQueries.stDedupRocksDb(spark, dir).collect().toSeq
     // The per-batch progress JSON names the state operator's custom
     // metrics, and the rocksdb* keys exist only under the RocksDB
     // provider — the strongest in-band proof the provider was active.
-    val rocksProgress = StreamingQueries.lastDedupProgress.mkString("\n")
+    val (rocks, rocksProgress) =
+      progressDuring(StreamingQueries.stDedupRocksDb(spark, dir).collect().toSeq)
     assert(rocksProgress.contains("rocksdb"),
       s"expected RocksDB custom metrics in query progress:\n$rocksProgress")
     assert(rocks === heap, "provider swap must be semantics-invisible")
     // And the heap run after it is still on the default provider.
-    StreamingQueries.stDedup(spark, dir).collect()
-    assert(!StreamingQueries.lastDedupProgress.mkString("\n").contains("rocksdb"),
+    val (_, afterProgress) = progressDuring(StreamingQueries.stDedup(spark, dir).collect())
+    assert(!afterProgress.contains("rocksdb"),
       "RocksDB conf leaked out of its isolated session")
   }
 
@@ -335,12 +367,11 @@ class StreamingSpec extends SparkSpec {
     // Heap run first: its progress must carry no rocksdb metrics (the
     // dedup test already pins that the override cannot leak BETWEEN
     // sessions; this pins the join query's own default).
-    val heap = StreamingQueries.stJoin(spark, dir).collect().toSeq
-    val heapProgress = StreamingQueries.lastJoinProgress.mkString("\n")
+    val (heap, heapProgress) = progressDuring(StreamingQueries.stJoin(spark, dir).collect().toSeq)
     assert(heapProgress.nonEmpty && !heapProgress.contains("rocksdb"),
       "default provider join run must not report RocksDB custom metrics")
-    val rocks = StreamingQueries.stJoinRocksDb(spark, dir).collect().toSeq
-    val rocksProgress = StreamingQueries.lastJoinProgress.mkString("\n")
+    val (rocks, rocksProgress) =
+      progressDuring(StreamingQueries.stJoinRocksDb(spark, dir).collect().toSeq)
     assert(rocksProgress.contains("rocksdb"),
       s"expected RocksDB custom metrics in join query progress:\n$rocksProgress")
     // Semantics-invisible INCLUDING the three-phase eviction gates: the
@@ -381,9 +412,8 @@ class StreamingSpec extends SparkSpec {
 
   test("st_tws_ttl: expired keys provably restart from zero, live keys telescope") {
     import graft.queries.StreamingQueries
-    val rows = StreamingQueries.stTwsTtl(spark, "/root/testdata/sf0.001")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val progress = StreamingQueries.lastTtlProgress.mkString("\n")
+    val (rows, progress) = progressDuring(StreamingQueries.stTwsTtl(spark, "/root/testdata/sf0.001")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     assert(progress.contains("transformWithState"),
       s"expected the transformWithState operator in progress:\n$progress")
     assert(progress.contains("rocksdb"),
@@ -412,11 +442,10 @@ class StreamingSpec extends SparkSpec {
 
   test("st_tws_count: transformWithState runs, state persists across batches") {
     import graft.queries.StreamingQueries
-    val rows = StreamingQueries.stTwsCount(spark, "/root/testdata/sf0.001")
-      .collect().toSeq
     // the new API's state operator is named in progress — in-band proof
     // transformWithState (not a fallback) executed, on RocksDB
-    val progress = StreamingQueries.lastTwsProgress.mkString("\n")
+    val (rows, progress) = progressDuring(StreamingQueries.stTwsCount(spark, "/root/testdata/sf0.001")
+      .collect().toSeq)
     assert(progress.contains("transformWithState"),
       s"expected the transformWithState operator in progress:\n$progress")
     assert(progress.contains("rocksdb"),
@@ -435,11 +464,10 @@ class StreamingSpec extends SparkSpec {
 
   test("st_lsh_dedup: streaming admission evicts, readmits, and self-drops") {
     import graft.queries.StreamingQueries
-    val rows = StreamingQueries.stLshDedup(spark, "/root/testdata/sf0.001")
+    val (rows, progress) = progressDuring(StreamingQueries.stLshDedup(spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getInt(3),
-        r.getBoolean(4))).toSeq
-    val progress = StreamingQueries.lastLshProgress.mkString("\n")
+        r.getBoolean(4))).toSeq)
     assert(progress.contains("transformWithState"),
       s"expected the transformWithState operator in progress:\n$progress")
     assert(progress.contains("rocksdb"),
@@ -534,11 +562,10 @@ class StreamingSpec extends SparkSpec {
 
   test("st_pipeline: composed ingest curation screens, admits, evicts, and self-drops") {
     import graft.queries.StreamingQueries
-    val rows = StreamingQueries.stPipeline(spark, "/root/testdata/sf0.001")
+    val (rows, progress) = progressDuring(StreamingQueries.stPipeline(spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getInt(3), r.getString(4)))
-      .toSeq // (phase, doc_id, n_bands, stage)
-    val progress = StreamingQueries.lastPipeProgress.mkString("\n")
+      .toSeq) // (phase, doc_id, n_bands, stage)
     assert(progress.contains("transformWithState"),
       s"expected the transformWithState operator in progress:\n$progress")
     assert(progress.contains("rocksdb"),

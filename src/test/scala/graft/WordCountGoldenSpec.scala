@@ -9,9 +9,11 @@ import graft.core.WordCount
   */
 class WordCountGoldenSpec extends SparkSpec {
 
-  private def counts(paths: String*): Map[String, Long] =
+  private def counts(paths: String*): Map[String, Long] = {
+    paths.foreach(p => requireCorpus(p))
     WordCount.run(spark, paths).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
 
   test("2.txt golden: totals and spot keys (FIXTURES §2)") {
     val m = counts("/root/reference/2.txt")
