@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Spark-first that is ONE declarative plan:
   *
   * {{{
-  *   FileScan text → Filter(value != '') → Generate(word_counts(value))
+  *   Lines scan → Filter(value != '') → Generate(word_counts(value))
   *     → Exchange(hash(word), spark.sql.shuffle.partitions, REPARTITION_BY_NUM)
   *     → HashAggregate(partial sum) → HashAggregate(final sum)
   * }}}
@@ -44,8 +44,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB):
   *   - the plan has exactly one Exchange, keyed on `word`;
-  *   - input parallelism comes from file splits
-  *     (`spark.sql.files.maxPartitionBytes`), not reader-thread counts;
+  *   - input parallelism comes from byte ranges, not reader-thread
+  *     counts: [[graft.sources.Lines.read]] cuts files into ranges of at
+  *     most min(`spark.sql.files.maxPartitionBytes`, total bytes /
+  *     `defaultParallelism`) and packs them by size into about
+  *     `defaultParallelism` partitions (more when the input exceeds
+  *     `maxPartitionBytes` per core), so a map wave is balanced by bytes
+  *     whatever the file count;
   *   - reduce parallelism is `spark.sql.shuffle.partitions` exactly, read
   *     when the plan is built; set it to the reducer width the data
   *     needs, as the reference sets `nReducers`;
@@ -62,28 +67,35 @@ object WordCount {
   /** Max key length; words longer are dropped (`mpi_mapreduce.c:209-211`). */
   val WordLength = 70
 
-  /** Line-oriented text scan over files/globs.
+  /** Line-oriented text scan over files, directories and globs.
     *
     * Replaces `reader()` (`mpi_mapreduce.c:85-106`): the bounded queue,
     * lock and `usleep` backpressure vanish — Spark tasks pull lines via
-    * iterators with spill-capable downstream operators. The reference
-    * drops only lines whose first byte is `\n` (`mpi_mapreduce.c:91`),
-    * i.e. empty lines after LF-splitting; a line of spaces is kept.
+    * iterators with spill-capable downstream operators. The lines come
+    * from [[graft.sources.Lines.read]], which resolves paths and splits
+    * lines exactly as `spark.read.text` does, but cuts files into byte
+    * ranges packed by size, so many small files run as one map wave. The
+    * reference drops only lines whose first byte is `\n`
+    * (`mpi_mapreduce.c:91`), i.e. empty lines after LF-splitting; a line
+    * of spaces is kept.
     */
   def ingest(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.text(paths: _*).where(col("value") =!= "")
+    graft.sources.Lines.read(spark, paths).where(col("value") =!= "")
 
-  /** BYTE FIDELITY (SURVEY §1 parity warning, resolved): `spark.read
-    * .text` does NOT decode — it stores each line's raw file bytes in a
+  /** BYTE FIDELITY (SURVEY §1 parity warning, resolved): the line source
+    * does NOT decode — it stores each line's raw file bytes in a
     * `UTF8String` verbatim, so invalid-UTF-8 input (the C engine's
     * signed `char*` world, `mpi_mapreduce.c:133-161`) flows through the
     * whole pipeline byte-exactly: tokenize splits on the 0x20 byte,
     * [[normalize]] walks raw bytes exactly like the C, `groupBy`
     * compares raw bytes, `octet_length` IS `strlen`, and the text sink
-    * writes the bytes back out unchanged. U+FFFD replacement happens
-    * only when a value is materialized to a JVM String (collect/show)
-    * or re-encoded (`encode`) — display, not semantics. Pinned by
-    * EncodingFidelitySpec; `hex(col)` observes the raw bytes.
+    * writes the bytes back out unchanged. Two line rules differ from the
+    * C's `fgets`, as in `spark.read.text`: a UTF-8 BOM at byte 0 of a
+    * file is dropped (one anywhere else is kept), and CR and CRLF end a
+    * line as LF does. U+FFFD replacement happens only when a value is
+    * materialized to a JVM String (collect/show) or re-encoded
+    * (`encode`) — display, not semantics. Pinned by EncodingFidelitySpec
+    * and LinesSpec; `hex(col)` observes the raw bytes.
     */
 
   /** Tokenize: split on single space ONLY (`getWord`,
@@ -163,7 +175,10 @@ object WordCount {
   /** Text sink matching the reference's output shape: `"%s %d"` per word,
     * one part-file per partition, merged by concatenation
     * (`mpi_mapreduce.c:278-289`, `mpi_mm.sub:11`). Output is unordered —
-    * comparisons must be order-insensitive (SURVEY §2.10).
+    * comparisons must be order-insensitive (SURVEY §2.10). The lines go
+    * through [[graft.sources.Lines.write]]: the session's commit
+    * protocol and `write.text`'s file set, without its per-task
+    * file-format setup.
     *
     * `byRefHash = true` reproduces the reference's file GROUPING: the
     * reference writes one file per reducer, a word's reducer being
@@ -186,7 +201,6 @@ object WordCount {
           graft.functions.RefHash.ref_hash_bytes(col("word")))
       else if (partitions > 0) counts.repartition(partitions)
       else counts
-    df.select(concat_ws(" ", col("word"), col("count")))
-      .write.mode("overwrite").text(outDir)
+    graft.sources.Lines.write(df.select(concat_ws(" ", col("word"), col("count"))), outDir)
   }
 }

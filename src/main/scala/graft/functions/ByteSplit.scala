@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why not the built-in `split(value, " ", -1)`: `StringSplit` routes
   * through `java.util.regex` on a DECODED JVM String, which replaces
   * every invalid-UTF-8 byte with U+FFFD — breaking the raw-byte fidelity
-  * the rest of the pipeline preserves (`spark.read.text` stores raw file
-  * bytes; [[NormalizeWord]] walks raw bytes; see EncodingFidelitySpec).
+  * the rest of the pipeline preserves (the line source,
+  * [[graft.sources.Lines]], stores raw file bytes as `spark.read.text`
+  * does; [[NormalizeWord]] walks raw bytes; see EncodingFidelitySpec).
   * A single byte scan is also cheaper than regex splitting in the
   * word-count hot path. Splitting on 0x20 is decode-agnostic for valid
   * UTF-8 too: 0x20 never occurs inside a multi-byte sequence (all

@@ -73,24 +73,32 @@ object StreamingQueries extends QueryModule {
     */
   private[graft] def stagePhases(s: SparkSession, name: String, phases: Seq[DataFrame]): String = {
     val srcDir = freshDir(s"$name/src")
-    phases.zipWithIndex.foreach { case (df, i) =>
+    stampInOrder(phases.zipWithIndex.map { case (df, i) =>
       val scratch = freshDir(s"$name/stage$i")
       df.coalesce(1).write.mode("overwrite").parquet(scratch)
-      val part = new java.io.File(scratch).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .head
       val dst = java.nio.file.Paths.get(srcDir, f"phase-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst,
+      java.nio.file.Files.move(parquetParts(scratch).head.toPath, dst,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // the mtime IS the phase order — on a filesystem where it cannot
-      // be set, the replay would be arbitrarily ordered and the
-      // eviction oracles would fail as a baffling hash mismatch, so
-      // surface it as a setup error instead
-      require(dst.toFile.setLastModified(1700000000000L + i * 60000L),
-        s"could not set modification time on $dst — phase ordering undefined")
-    }
+      dst.toFile
+    })
     srcDir
   }
+
+  private def parquetParts(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+
+  /** Give `files` strictly increasing modification times, in order: the
+    * order a file stream replays them in. On a filesystem where the
+    * mtime cannot be set the replay would be arbitrarily ordered, and
+    * order-dependent oracles would fail as a baffling hash mismatch, so
+    * that is a setup error instead.
+    */
+  private def stampInOrder(files: Seq[java.io.File]): Unit =
+    files.zipWithIndex.foreach { case (f, i) =>
+      require(f.setLastModified(1700000000000L + i * 60000L),
+        s"could not set modification time on $f — replay order undefined")
+    }
 
   /** Start `writer` on a fresh checkpoint under `name`, process all
     * available input, and stop — in `finally`, so a failed batch never
@@ -309,6 +317,9 @@ object StreamingQueries extends QueryModule {
       .select(col("text").as("value"))
       .repartition(8)
       .write.mode("overwrite").parquet(srcDir)
+    // the eight tasks race to write their files, so their mtimes would
+    // replay them in a different order on each run
+    stampInOrder(parquetParts(srcDir).sortBy(_.getName))
     val deltaDir = freshDir("st_wc_update/delta")
     val lines = s.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(

@@ -15,6 +15,7 @@ import org.apache.hadoop.io.NullWritable
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Avro container-file source/sink built directly on the avro +
   * avro-mapred jars that ship inside the Spark distribution — the
@@ -245,7 +246,7 @@ object AvroIO {
     codecFor(codec) // vet the name on the DRIVER, before any task runs
     val schemaJson = avroSchemaFor(df.schema).toString
     val sparkSchema = df.schema
-    val confSer = new SerializableHadoopConf(
+    val confSer = new SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(confSer.value)
@@ -361,23 +362,5 @@ object AvroIO {
         Row.fromSeq(vals.toIndexedSeq)
       }
     s.createDataFrame(rows, schema)
-  }
-
-  /** Hadoop `Configuration` is not `Serializable`; this is the
-    * standard writable-wrapper so executor tasks can resolve the
-    * right `FileSystem` for the sink URI.
-    */
-  private class SerializableHadoopConf(@transient private var conf: Configuration)
-      extends Serializable {
-    def value: Configuration = conf
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new Configuration(false)
-      conf.readFields(in)
-    }
   }
 }

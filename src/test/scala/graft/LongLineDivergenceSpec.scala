@@ -11,8 +11,10 @@ import graft.core.WordCount
   * seen as several "lines", and a word straddling the 255-byte boundary is
   * split into two fragment tokens.
   *
-  * This engine reads whole physical lines (`spark.read.text` splits on
-  * newlines only, any length), so the straddling word stays ONE token.
+  * This engine reads whole physical lines ([[graft.sources.Lines]] splits
+  * on line breaks only, any length, and a range reads past its end to
+  * finish its last line, as `spark.read.text` does), so the straddling
+  * word stays ONE token.
   * SURVEY §7 declares this a deliberate divergence — the C behavior is a
   * buffer-size artifact, not a semantic choice — and COVERAGE.md records
   * it. This suite asserts the engine's documented behavior so a regression

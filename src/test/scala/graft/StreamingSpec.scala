@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.streaming.{EventStream, Session}
@@ -28,12 +28,19 @@ class StreamingSpec extends SparkSpec {
     * any provider.
     */
   private def progressDuring[A](body: => A): (A, String) = {
+    val (out, progress) = progressEvents(body)
+    (out, progress.flatMap(_.stateOperators.map(_.json)).mkString("\n"))
+  }
+
+  /** Run `body` and return its result with the progress of every batch
+    * of the streams it started, in the order the batches ran.
+    */
+  private def progressEvents[A](body: => A): (A, Seq[StreamingQueryProgress]) = {
     val sc = spark.sparkContext
-    val states = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case p: StreamingQueryListener.QueryProgressEvent =>
-          p.progress.stateOperators.foreach(op => states.add(op.json))
+        case p: StreamingQueryListener.QueryProgressEvent => progress.add(p.progress)
         case _ =>
       }
     }
@@ -42,7 +49,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val out = body
       Bridge.drainListenerBus(sc)
-      (out, states.asScala.mkString("\n"))
+      (out, progress.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -408,6 +415,17 @@ class StreamingSpec extends SparkSpec {
     // end is inside the watermark's millisecond but 500 us past its
     // micro value → withheld (raw-micros comparison, no ms rounding up)
     assert(emittedUsers(Seq(1L -> (t0 + 500L), 2L -> (t0 + gapUs + 900L))) === Set.empty)
+  }
+
+  test("st_wc_update replays its eight files in the same order on every run") {
+    import graft.queries.StreamingQueries
+    def inputRows(): Seq[Long] =
+      progressEvents(StreamingQueries.stWcUpdate(spark, "/root/testdata/sf0.001"))._2
+        .map(_.numInputRows)
+    val first = inputRows()
+    // 500 documents over 8 files: sizes 62 and 63, so the order shows
+    assert(first.count(_ > 0) == 8 && first.distinct.size > 1, first)
+    assert(inputRows() === first)
   }
 
   test("st_tws_ttl: expired keys provably restart from zero, live keys telescope") {
