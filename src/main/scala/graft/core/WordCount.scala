@@ -177,8 +177,9 @@ object WordCount {
     * (`mpi_mapreduce.c:278-289`, `mpi_mm.sub:11`). Output is unordered —
     * comparisons must be order-insensitive (SURVEY §2.10). The lines go
     * through [[graft.sources.Lines.write]]: the session's commit
-    * protocol and `write.text`'s file set, without its per-task
-    * file-format setup.
+    * protocol and `write.text`'s file set and modes, without its
+    * per-task file-format setup or, on a local output, a `chmod` process
+    * per file.
     *
     * `byRefHash = true` reproduces the reference's file GROUPING: the
     * reference writes one file per reducer, a word's reducer being

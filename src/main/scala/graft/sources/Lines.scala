@@ -4,6 +4,8 @@ import java.io.{BufferedOutputStream, InputStream}
 import java.text.SimpleDateFormat
 import java.util.{Date, Locale, UUID}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.Text
@@ -29,6 +31,12 @@ import org.apache.spark.util.SerializableConfiguration
   * per-reducer output files (`mpi_mapreduce.c:85-106,278-289`), without
   * Spark's generic file-format path around them: [[read]] gives
   * `spark.read.text`'s lines and [[write]] `write.text`'s files.
+  *
+  * Both ends share one broadcast Hadoop conf per session conf
+  * ([[sharedConf]]). On a `file:` output the sink's job sets modes through
+  * java.nio ([[NioLocalFileSystem]]), so a pass starts no `chmod` process
+  * where libhadoop is absent; the files and their modes stay
+  * `write.text`'s.
   */
 object Lines {
 
@@ -52,20 +60,44 @@ object Lines {
     * byte 0 of a file is dropped; every other byte passes through, invalid
     * UTF-8 included.
     *
-    * One listing and one broadcast configuration per call; files are cut
-    * into byte ranges packed by size ([[pack]]), so many small files run
-    * as one wave. Each task adds its ranges' bytes and lines to its input
-    * metrics.
+    * One listing per call and one broadcast configuration per session
+    * conf ([[sharedConf]]); files are cut into byte ranges packed by size
+    * ([[pack]]), so many small files run as one wave. Each task adds its
+    * ranges' bytes and lines to its input metrics.
     */
   def read(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val conf = Bridge.hadoopConf(spark)
+    val (conf, shared) = sharedConf(spark)
     val codecs = new CompressionCodecFactory(conf)
     val files = paths.flatMap(list(conf, _)).map(st =>
       Range(st.getPath.toString, 0L, st.getLen, codecs.getCodec(st.getPath) != null))
     val sc = spark.sparkContext
     val parts = pack(files, Bridge.maxPartitionBytes(spark), sc.defaultParallelism)
-    Bridge.createDataFrame(spark,
-      new LinesRDD(sc, parts, sc.broadcast(new SerializableConfiguration(conf))), schema)
+    Bridge.createDataFrame(spark, new LinesRDD(sc, parts, shared.conf), schema)
+  }
+
+  /** One broadcast of a session's Hadoop conf, with its entries. */
+  private[graft] final class SharedConf(val sc: SparkContext, val entries: Map[String, String],
+      val conf: Broadcast[SerializableConfiguration])
+
+  private var shared: SharedConf = _
+
+  private[graft] def entries(conf: Configuration): Map[String, String] =
+    conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+
+  /** A fresh copy of the session's Hadoop conf, and the broadcast that
+    * both ends share: one slot, broadcast again when the SparkContext or
+    * the conf's entries change. Replaced broadcasts are left to the
+    * ContextCleaner, since a frame read earlier may still use one.
+    */
+  private[graft] def sharedConf(spark: SparkSession): (Configuration, SharedConf) = {
+    val conf = Bridge.hadoopConf(spark)
+    val now = entries(conf)
+    val sc = spark.sparkContext
+    synchronized {
+      if (shared == null || (shared.sc ne sc) || shared.entries != now)
+        shared = new SharedConf(sc, now, sc.broadcast(new SerializableConfiguration(conf)))
+      (conf, shared)
+    }
   }
 
   private def list(conf: Configuration, path: String): Seq[FileStatus] = {
@@ -111,54 +143,91 @@ object Lines {
     * `InsertIntoHadoopFsRelationCommand` does, it runs the session's
     * `spark.sql.sources.commitProtocolClass`, inside one SQL execution,
     * writes a part file for partition 0 and every non-empty partition
-    * and, when a task fails, aborts the job and rethrows.
+    * and, when a task fails, aborts the job and rethrows. The driver and
+    * every task run on one job conf ([[setupJob]]), so on `file:` no file
+    * or directory it creates starts a `chmod` process.
     */
   def write(lines: DataFrame, outDir: String): Unit = {
     val spark = lines.sparkSession
     val sc = spark.sparkContext
-    val conf = Bridge.hadoopConf(spark)
+    val sink = setupJob(spark, outDir)
+    // the task closure takes these, not the driver-only `Job`
+    val (committer, base, extra) = (sink.committer, sink.base, sink.extra)
+    try {
+      val tracker = new SimpleDateFormat("yyyyMMddHHmmss", Locale.US).format(new Date)
+      val commits = Bridge.withNewExecution(lines, "save") { rows =>
+        val data = if (rows.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1) else rows
+        val msgs = new Array[FileCommitProtocol.TaskCommitMessage](data.partitions.length)
+        sc.runJob(data,
+          (ctx: TaskContext, it: Iterator[InternalRow]) => writeTask(ctx, it, committer, base, extra, tracker),
+          data.partitions.indices,
+          (i: Int, m: FileCommitProtocol.TaskCommitMessage) => { committer.onTaskCommit(m); msgs(i) = m })
+        msgs.toSeq
+      }
+      committer.commitJob(sink.job, commits)
+    } catch {
+      case t: Throwable =>
+        committer.abortJob(sink.job)
+        throw t
+    }
+  }
+
+  /** A sink job after `setupJob`: a task's conf is `base`'s with `extra`
+    * set, then the task's ids ([[taskConf]]).
+    */
+  private[graft] final case class SinkJob(job: Job, committer: FileCommitProtocol,
+      base: Broadcast[SerializableConfiguration], extra: Map[String, String])
+
+  /** Delete `outDir` and set up the commit protocol's job on it. The
+    * job's conf is the session's, with the output format's entries and,
+    * when the output is on `file:`, that scheme mapped to an uncached
+    * [[NioLocalFileSystem]]; the session's own `FileSystem` instance and
+    * every other writer keep Hadoop's. `extra` holds the entries the
+    * job's conf adds to or changes in [[sharedConf]]'s; it removes none.
+    */
+  private[graft] def setupJob(spark: SparkSession, outDir: String): SinkJob = {
+    val (conf, shared) = sharedConf(spark)
     val out = new Path(outDir)
     val fs = out.getFileSystem(conf)
     val qualified = fs.makeQualified(out)
     if (fs.exists(qualified)) fs.delete(qualified, true)
     val job = Job.getInstance(conf)
+    val jobConf = job.getConfiguration
+    if (qualified.toUri.getScheme == "file") {
+      jobConf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      jobConf.setBoolean("fs.file.impl.disable.cache", true)
+    }
     job.setOutputKeyClass(classOf[Void])
     job.setOutputValueClass(classOf[InternalRow])
     FileOutputFormat.setOutputPath(job, qualified)
     val committer = FileCommitProtocol.instantiate(Bridge.commitProtocolClass(spark),
       UUID.randomUUID().toString, qualified.toString, dynamicPartitionOverwrite = false)
     committer.setupJob(job)
-    try {
-      val jobConf = sc.broadcast(new SerializableConfiguration(job.getConfiguration))
-      val tracker = new SimpleDateFormat("yyyyMMddHHmmss", Locale.US).format(new Date)
-      val commits = Bridge.withNewExecution(lines, "save") { rows =>
-        val data = if (rows.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1) else rows
-        val msgs = new Array[FileCommitProtocol.TaskCommitMessage](data.partitions.length)
-        sc.runJob(data,
-          (ctx: TaskContext, it: Iterator[InternalRow]) => writeTask(ctx, it, committer, jobConf, tracker),
-          data.partitions.indices,
-          (i: Int, m: FileCommitProtocol.TaskCommitMessage) => { committer.onTaskCommit(m); msgs(i) = m })
-        msgs.toSeq
-      }
-      committer.commitJob(job, commits)
-    } catch {
-      case t: Throwable =>
-        committer.abortJob(job)
-        throw t
-    }
+    val extra = entries(jobConf).filter { case (k, v) => !shared.entries.get(k).contains(v) }
+    SinkJob(job, committer, shared.conf, extra)
   }
 
-  private def writeTask(ctx: TaskContext, rows: Iterator[InternalRow], committer: FileCommitProtocol,
-      jobConf: Broadcast[SerializableConfiguration], tracker: String): FileCommitProtocol.TaskCommitMessage = {
-    val jobId = new JobID(tracker, ctx.stageId())
-    val attempt = new TaskAttemptID(new TaskID(jobId, TaskType.MAP, ctx.partitionId()),
-      ctx.taskAttemptId().toInt & Int.MaxValue)
-    val conf = new JobConf(jobConf.value.value)
-    conf.set("mapreduce.job.id", jobId.toString)
+  /** The conf of sink task `attempt`: the job's, with the five per-task
+    * ids that `HadoopMapReduceCommitProtocol` sets.
+    */
+  private[graft] def taskConf(base: Broadcast[SerializableConfiguration], extra: Map[String, String],
+      attempt: TaskAttemptID): JobConf = {
+    val conf = new JobConf(base.value.value)
+    extra.foreach { case (k, v) => conf.set(k, v) }
+    conf.set("mapreduce.job.id", attempt.getJobID.toString)
     conf.set("mapreduce.task.id", attempt.getTaskID.toString)
     conf.set("mapreduce.task.attempt.id", attempt.toString)
     conf.setBoolean("mapreduce.task.ismap", true)
     conf.setInt("mapreduce.task.partition", 0)
+    conf
+  }
+
+  private def writeTask(ctx: TaskContext, rows: Iterator[InternalRow], committer: FileCommitProtocol,
+      base: Broadcast[SerializableConfiguration], extra: Map[String, String],
+      tracker: String): FileCommitProtocol.TaskCommitMessage = {
+    val attempt = new TaskAttemptID(new TaskID(new JobID(tracker, ctx.stageId()), TaskType.MAP,
+      ctx.partitionId()), ctx.taskAttemptId().toInt & Int.MaxValue)
+    val conf = taskConf(base, extra, attempt)
     val task = new TaskAttemptContextImpl(conf, attempt)
     committer.setupTask(task)
     try {
@@ -192,14 +261,14 @@ private final case class LinesPartition(index: Int, ranges: Array[Lines.Range]) 
 /** A task per partition, reading its ranges in turn. Its row is reused and
   * the row's string points into the reader's line buffer until the next row.
   */
-private final class LinesRDD(sc: SparkContext, parts: Array[Array[Lines.Range]],
-    conf: Broadcast[SerializableConfiguration]) extends RDD[InternalRow](sc, Nil) {
+private[graft] final class LinesRDD(sc: SparkContext, parts: Array[Array[Lines.Range]],
+    val hadoopConf: Broadcast[SerializableConfiguration]) extends RDD[InternalRow](sc, Nil) {
 
   override protected def getPartitions: Array[Partition] =
     Array.tabulate[Partition](parts.length)(i => LinesPartition(i, parts(i)))
 
   override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
-    val hadoop = conf.value.value
+    val hadoop = hadoopConf.value.value
     val row = new GenericInternalRow(1)
     split.asInstanceOf[LinesPartition].ranges.iterator.flatMap { r =>
       val path = new Path(r.path)

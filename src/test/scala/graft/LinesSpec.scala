@@ -1,13 +1,17 @@
 package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
+import java.net.URI
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -15,7 +19,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.sources.{Lines, RangeLines}
+import graft.sources.{Lines, LinesRDD, NioLocalFileSystem, RangeLines}
 
 /** [[graft.sources.Lines]] against the built-in text source and sink it
   * replaces: the same lines from the same paths, cut anywhere, and the
@@ -239,6 +243,18 @@ class LinesSpec extends SparkSpec {
       fs.exists(_.getName == "_SUCCESS"), fs.exists(_.getName == "_temporary"))
   }
 
+  /** Every entry of `dir` (itself as "."), with part names cut to their
+    * index, and its POSIX mode.
+    */
+  private def listing(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.toSeq.map { p =>
+      val name = root.relativize(p).toString.replaceAll("^(\\.?part-\\d+)-.*?(\\.crc)?$", "$1$2")
+      (if (name.isEmpty) "." else name) -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.sorted finally walk.close()
+  }
+
   test("the sink writes write.text's lines and file set, and one SQL execution") {
     val root = graft.core.TempDirs.create("graft-lines-sink")
     val base = spark.range(0, 10, 1, 4)
@@ -248,18 +264,68 @@ class LinesSpec extends SparkSpec {
       "holes" -> base.where(col("id") < 2 || col("id") >= 7),
       "first-empty" -> base.where(col("id") >= 7),
       "none" -> spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Lines.schema))
+    val sessionConf = Bridge.hadoopConf(spark)
+    val sessionFs = FileSystem.get(URI.create("file:///"), sessionConf)
     for ((name, df) <- frames) {
       val lines = df.select("value")
       lines.write.mode("overwrite").text(s"$root/$name-builtin")
       val (_, _, written, sqlStarts) = taskMetrics(Lines.write(lines, s"$root/$name"))
       val ours = fileSet(s"$root/$name")
       assert(ours === fileSet(s"$root/$name-builtin"), name)
+      // the hidden .crc files and every entry's mode too
+      val entries = listing(s"$root/$name")
+      assert(entries.exists(_._1 == "._SUCCESS.crc") && entries.exists(_._1.startsWith(".part-")), entries)
+      assert(entries === listing(s"$root/$name-builtin"), name)
       assert(ours._3 && !ours._4, s"$name: _SUCCESS written, no _temporary left")
       val sizes = new java.io.File(s"$root/$name").listFiles()
         .filter(_.getName.startsWith("part-")).map(_.length).sum
       assert(written == sizes, name)
       assert(sqlStarts == 1, name)
     }
+    assert(FileSystem.get(URI.create("file:///"), sessionConf) eq sessionFs)
+  }
+
+  test("the sink's job conf maps file: to the graft filesystem; a task's conf is the job's but for its ids") {
+    val sink = Lines.setupJob(spark, graft.core.TempDirs.create("graft-lines-jobconf") + "/out")
+    try {
+      val jobConf = sink.job.getConfiguration
+      assert(FileSystem.get(URI.create("file:///"), jobConf).getClass == classOf[NioLocalFileSystem])
+      assert(FileSystem.get(URI.create("file:///"), Bridge.hadoopConf(spark)).getClass != classOf[NioLocalFileSystem])
+      val attempt = new TaskAttemptID("20261020000000", 7, TaskType.MAP, 3, 11)
+      val task = Lines.taskConf(sink.base, sink.extra, attempt)
+      val ids = Set("mapreduce.job.id", "mapreduce.task.id", "mapreduce.task.attempt.id",
+        "mapreduce.task.ismap", "mapreduce.task.partition")
+      assert(Lines.entries(task) -- ids === Lines.entries(jobConf) -- ids)
+      assert(task.get("mapreduce.task.attempt.id") == attempt.toString)
+      assert(sink.extra.size < 20, sink.extra.keys)
+    } finally sink.committer.abortJob(sink.job)
+  }
+
+  test("reads and writes share one conf broadcast until the session's conf changes") {
+    def broadcastOf(df: DataFrame): Long = {
+      def walk(rdd: org.apache.spark.rdd.RDD[_]): Seq[LinesRDD] = rdd match {
+        case l: LinesRDD => Seq(l)
+        case r => r.dependencies.flatMap(d => walk(d.rdd))
+      }
+      val found = walk(df.queryExecution.toRdd)
+      assert(found.size == 1)
+      found.head.hadoopConf.id
+    }
+    val dir = dirWith("memo", "a.txt" -> "x\n".getBytes("US-ASCII")).toString
+    val first = broadcastOf(Lines.read(spark, Seq(dir)))
+    assert(broadcastOf(Lines.read(spark, Seq(dir))) == first)
+    val out = graft.core.TempDirs.create("graft-lines-memo") + "/out"
+    Lines.write(Lines.read(spark, Seq(dir)), out)
+    val sink = Lines.setupJob(spark, out)
+    sink.committer.abortJob(sink.job)
+    assert(sink.base.id == first && Lines.sharedConf(spark)._2.conf.id == first)
+    spark.conf.set("spark.hadoop.graft.probe", "1")
+    try {
+      val probed = Lines.sharedConf(spark)._2.conf
+      assert(probed.id != first && probed.value.value.get("spark.hadoop.graft.probe") == "1")
+      assert(broadcastOf(Lines.read(spark, Seq(dir))) == probed.id)
+    } finally spark.conf.unset("spark.hadoop.graft.probe")
+    assert(Lines.sharedConf(spark)._2.conf.id != first)
   }
 
   test("the sink overwrites, and a failing row leaves no part file and rethrows") {
