@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -23,6 +23,8 @@ import org.json4s.jackson.JsonMethods.{compact, parse}
   *     built — the driver round-trips of iterative operators, and every
   *     streaming fixture's stream;
   *   - `census`: operator counts of the executed tree ([[census]]);
+  *   - `config`: what a [[DevQueries]] entry resolved from its input
+  *     (n, cell counts, caps, …); null for an oracled query;
   *   - `samples` and `min`: seconds of `passes` timed runs after one
   *     untimed warm-up, each building the frame anew and writing it to a
   *     `noop` sink, caches cleared between runs (Bench's discipline);
@@ -37,17 +39,19 @@ import org.json4s.jackson.JsonMethods.{compact, parse}
   *
   * `runMain graft.Profile <sfDir> <names|prefixes> [passes] [planDir]`:
   * each comma-separated token selects the query of that name, or else
-  * every query whose name starts with it. `passes` = 0 only builds.
+  * every query whose name starts with it, among [[SparkEntry.queries]]
+  * and the `dev_*` [[DevQueries]]. `passes` = 0 only builds.
   */
 object Profile {
 
   final case class Record(query: String, constructionJobs: Int, census: JValue,
-      samples: Seq[Double], stages: Seq[JValue], progress: Seq[StreamingQueryProgress],
-      error: Option[String]) {
+      config: JValue, samples: Seq[Double], stages: Seq[JValue],
+      progress: Seq[StreamingQueryProgress], error: Option[String]) {
     def json(sfDir: String): String = compact(JObject(
       "query" -> JString(query),
       "construction_jobs" -> JInt(constructionJobs),
       "census" -> census,
+      "config" -> config,
       "samples" -> JArray(samples.map(JDouble(_)).toList),
       "min" -> (if (samples.isEmpty) JNull else JDouble(samples.min)),
       "stages" -> JArray(stages.toList),
@@ -136,13 +140,20 @@ object Profile {
 
   /** Query names selected by comma-separated `tokens`. */
   def select(tokens: String): Seq[String] = {
-    val all = SparkEntry.queries.keys.toSeq.sorted
+    val all = (SparkEntry.queries.keys ++ DevQueries.queries.keys).toSeq.sorted
     tokens.split(",").map(_.trim).filter(_.nonEmpty).toSeq.flatMap { t =>
       val hit = if (all.contains(t)) Seq(t) else all.filter(_.startsWith(t))
       require(hit.nonEmpty, s"no query is named or prefixed '$t'")
       hit
     }.distinct
   }
+
+  /** The frame of query `name` and its resolved config. */
+  private def build(spark: SparkSession, sfDir: String, name: String): (DataFrame, JValue) =
+    SparkEntry.queries.get(name) match {
+      case Some(q) => (q(spark, sfDir), JNull)
+      case None => DevQueries.queries(name)(spark, sfDir)
+    }
 
   /** One query's row; the listener is registered only while it runs. */
   def profile(spark: SparkSession, sfDir: String, name: String, passes: Int,
@@ -152,7 +163,7 @@ object Profile {
     Bridge.drainListenerBus(sc)
     sc.addSparkListener(rec)
     try {
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val (df, config) = build(spark, sfDir, name)
       Bridge.drainListenerBus(sc)
       val jobs = rec.jobs.get()
       val progress = rec.progress.asScala.toSeq
@@ -170,18 +181,19 @@ object Profile {
         spark.catalog.clearCache()
         (1 to passes).map { _ =>
           val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+          build(spark, sfDir, name)._1.write.format("noop").mode("overwrite").save()
           val elapsed = (System.nanoTime() - t0) / 1e9
           spark.catalog.clearCache()
           elapsed
         }
       }
       Bridge.drainListenerBus(sc)
-      Record(name, jobs, counts, samples, rec.stages.asScala.toSeq, progress, None)
+      Record(name, jobs, counts, config, samples, rec.stages.asScala.toSeq, progress, None)
     } catch {
       case NonFatal(e) =>
         Bridge.drainListenerBus(sc)
-        Record(name, rec.jobs.get(), JNull, Nil, rec.stages.asScala.toSeq, rec.progress.asScala.toSeq,
+        Record(name, rec.jobs.get(), JNull, JNull, Nil, rec.stages.asScala.toSeq,
+          rec.progress.asScala.toSeq,
           Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
     } finally {
       spark.catalog.clearCache()
@@ -189,12 +201,10 @@ object Profile {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: graft.Profile <sfDir> <names|prefixes> [passes] [planDir]")
-    val sfDir = args(0)
-    val names = select(args(1))
-    val passes = if (args.length > 2) args(2).toInt else 3
-    val planDir = args.lift(3).map(new java.io.File(_))
+  /** The dev mains' session: `local[$SPARK_GRAFT_CPUS]`, as many
+    * shuffle partitions, UTC, no UI, ERROR logging.
+    */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -203,6 +213,16 @@ object Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: graft.Profile <sfDir> <names|prefixes> [passes] [planDir]")
+    val sfDir = args(0)
+    val names = select(args(1))
+    val passes = if (args.length > 2) args(2).toInt else 3
+    val planDir = args.lift(3).map(new java.io.File(_))
+    val spark = session()
     try names.foreach(n => println(profile(spark, sfDir, n, passes, planDir).json(sfDir)))
     finally spark.stop()
   }

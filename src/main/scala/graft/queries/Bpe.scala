@@ -302,7 +302,7 @@ object Bpe {
           col("p")("l").as("l"), col("p")("r").as("r"),
           col("p")("cnt").as("cnt"),
           // which batched round produced the rule — dropped by the
-          // gated projection, read by ScaleStudy's bpe_merges study
+          // gated projection, read by DevQueries' dev_bpe_train_batched
           lit(round).as("round"))
       val nMerged = roundRules.count()
       if (nMerged == 0) {

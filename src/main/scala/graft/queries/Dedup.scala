@@ -561,8 +561,8 @@ object Dedup extends QueryModule {
     * shuffle that exhausts local disk — BENCH_NOTES round-6 study).
     * A production run passes r = [[lshRowsForN]](n) (and any band
     * count); the oracled [[ddEmbedLsh]] keeps the r=8/B=24 gate config
-    * that its 192-literal oracle SQL replays. [[graft.ScaleStudy]]
-    * drives this rule-resolved path for the scale benchmarks.
+    * that its 192-literal oracle SQL replays. [[graft.DevQueries]]'
+    * `dev_embed_lsh` times this rule-resolved path.
     */
   private[graft] def embedLshPairs(
       e0: DataFrame, rowsPerBand: Int, bands: Int): DataFrame = {
@@ -693,8 +693,8 @@ object Dedup extends QueryModule {
     * n^1.5) or the pipeline hits the same quadratic wall the round-6
     * scale study measured for fixed-r embed-LSH. The oracled gate
     * pins k = [[SemdedupK]] (= kmeansCellsForN at gate n, asserted by
-    * ScaleConfigSpec); [[graft.ScaleStudy]] measures the rule-resolved
-    * path at larger n.
+    * ScaleConfigSpec); [[graft.DevQueries]]' `dev_semdedup*` entries
+    * time the rule-resolved path at larger n.
     */
   private[graft] def semdedup(vectors: DataFrame, centroidDir: String,
       k: Int = SemdedupK, iters: Int = SemdedupIters,
@@ -1600,8 +1600,8 @@ object Dedup extends QueryModule {
     contamEmbed(Tables(s, dir).embeddings, ContamEmbedEvalMod)
 
   /** Core of [[ddContamEmbed]], parameterized on the embeddings frame
-    * and the eval-membership modulus — ScaleStudy's `contam_embed`
-    * mode scales the modulus with n so the eval set stays
+    * and the eval-membership modulus — [[graft.DevQueries]]'
+    * `dev_contam_embed` scales the modulus with n so the eval set stays
     * benchmark-SIZED (constant) while the train side grows, which is
     * the production shape this operator's zero-shuffle plan assumes.
     */

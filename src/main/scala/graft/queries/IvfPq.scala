@@ -200,7 +200,7 @@ object IvfPq {
     * ([[Similarity.kmeansCellsForN]], cells ≈ √n) or the restricted
     * ADC scan degrades toward the full scan the cells exist to avoid.
     * The oracled gate pins k = [[CoarseK]] (= kmeansCellsForN at gate
-    * n); [[graft.ScaleStudy]]'s `ivfpq` study measures the
+    * n); [[graft.DevQueries]]' `dev_ivfpq*` entries time the
     * rule-resolved path at larger n.
     */
   private[graft] def ivfPqCore(vectors: DataFrame,

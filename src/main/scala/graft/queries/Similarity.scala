@@ -209,11 +209,12 @@ object Similarity extends QueryModule {
 
   /** Per-cell training-sample multiplier for the sampled-training twins
     * ([[simKmeansIvfSampled]], [[Dedup.ddSemdedupSampled]], and the
-    * sampled ScaleStudy rule paths): the sample is 8×k vectors, so one
-    * Lloyd iteration costs 8k² distance evaluations — with the
-    * k ≈ √n rule that is O(n) per iteration instead of the full
-    * corpus's n·k = O(n^1.5). Consistent with [[IvfPq.SampleCap]]
-    * (= 8 × [[KmeansK]] at the gate operating point); 8 vectors per
+    * sampled `dev_*` rule paths of [[graft.DevQueries]]): the sample
+    * is 8×k vectors, so one Lloyd iteration costs 8k² distance
+    * evaluations — with the k ≈ √n rule that is O(n) per iteration
+    * instead of the full corpus's n·k = O(n^1.5). Consistent with
+    * [[IvfPq.SampleCap]] (= 8 × [[KmeansK]] at the gate operating
+    * point); 8 vectors per
     * cell is enough for the mean estimates at every k the rule
     * produces (KmeansIvfSpec's recall floor holds on the sampled
     * model).
@@ -267,7 +268,7 @@ object Similarity extends QueryModule {
 
   /** Core of [[simKmeansIvf]], parameterized on the normed vector set,
     * the centroid sink, the cell count k (the [[kmeansCellsForN]] rule
-    * input — ScaleStudy measures the rule-resolved path), and the
+    * input — [[graft.Quality]] measures the rule-resolved path), and the
     * optional training-sample cap.
     */
   private[graft] def kmeansIvfCore(e: DataFrame, centDir: String,
@@ -390,7 +391,7 @@ object Similarity extends QueryModule {
   /** The CAPPED k-NN join under the hash gate — the skew discipline
     * that makes [[simKnnJoin]] production-shaped ([[KnnCandCap]]
     * sample on cells past the 4×-mean trigger), promoted from a
-    * ScaleStudy-only measurement to an oracled query, the same
+    * dev-only measurement to an oracled query, the same
     * treatment [[Dedup.ddSemdedupCapped]] gave SemDeDup's cell cap.
     *
     * The gate corpus is near-balanced (16 trained cells over 500
@@ -431,15 +432,16 @@ object Similarity extends QueryModule {
 
   /** Core of [[simKnnJoin]], parameterized on the (vec_id, embedding)
     * vector set, the centroid sink, and the (k, probes, trainCap)
-    * operating point — ScaleStudy's `knn_join` mode measures the
-    * rule-resolved path ([[kmeansCellsForN]] / [[kmeansProbesForK]])
-    * across decades.
+    * operating point — [[graft.DevQueries]]' `dev_knn_join` times the
+    * rule-resolved path ([[kmeansCellsForN]] cells at the fixed probe
+    * budget) across decades.
     */
   /** Candidate cap for the SKEW-PROOF k-NN-join configuration
-    * (ScaleStudy's `knn_join_capped`): a home cell over this size
-    * offers only its [[KnnCandCap]] smallest-md5-coin members as
-    * NEIGHBOR CANDIDATES (every vector still gets ranked output — the
-    * cap restricts the join's right side, not its left). The coin is
+    * (`dev_knn_join_capped`; its recall is a [[graft.Quality]] study):
+    * a home cell over this size offers only its [[KnnCandCap]]
+    * smallest-md5-coin members as NEIGHBOR CANDIDATES (every vector
+    * still gets ranked output — the cap restricts the join's right
+    * side, not its left). The coin is
     * similarity-oblivious, so the bound holds REGARDLESS of geometry —
     * the same argument as [[Dedup.SemdedupCellCap]]'s md5 blocks; the
     * semantic trade differs because top-k has no τ-witness: a capped

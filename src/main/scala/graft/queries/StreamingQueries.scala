@@ -104,7 +104,7 @@ object StreamingQueries extends QueryModule {
     * available input, and stop — in `finally`, so a failed batch never
     * leaves the query running.
     */
-  private def drain(writer: DataStreamWriter[_], name: String): Unit = {
+  private[graft] def drain(writer: DataStreamWriter[_], name: String): Unit = {
     val q = writer.option("checkpointLocation", freshDir(s"$name/chk")).start()
     try q.processAllAvailable() finally q.stop()
   }
@@ -457,7 +457,7 @@ object StreamingQueries extends QueryModule {
     * checkpoint FORMAT choice, same state, same recovery contract
     * (StreamingSpec's kill-and-restore proves recovery through it).
     */
-  private def rocksDbSession(s0: SparkSession): SparkSession = {
+  private[graft] def rocksDbSession(s0: SparkSession): SparkSession = {
     val ns = s0.newSession()
     ns.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     ns.conf.set(

@@ -43,6 +43,41 @@ class ProfileSpec extends SparkSpec {
     assert(r.error.exists(_.nonEmpty) && r.census === JNull && r.samples.isEmpty, r.error)
   }
 
+  test("every dev query builds apart from the oracled surface and reports its config") {
+    val dev = DevQueries.queries.keys.toSeq.sorted
+    assert(Profile.select("dev_") === dev)
+    assert(dev.forall(n => n.startsWith("dev_") && !SparkEntry.queries.contains(n)), dev)
+    assert(Profile.select("dd_") === SparkEntry.queries.keys.filter(_.startsWith("dd_")).toSeq.sorted)
+    // the six stream entries share one staging and drain path; building
+    // one of them keeps this test near 90 s
+    dev.filter(n => !n.startsWith("dev_stream") || n == "dev_stream_tws").foreach { name =>
+      val r = Profile.profile(spark, sf, name, passes = 0)
+      assert(r.error.isEmpty, s"$name: ${r.error}")
+      assert(r.config.isInstanceOf[JObject] && r.config != JObject(), s"$name: ${r.json(sf)}")
+      if (name.startsWith("dev_stream")) assert(r.progress.exists(_.numInputRows > 0), name)
+    }
+    assert(Profile.profile(spark, sf, "wc_top100", passes = 0).config === JNull)
+    assert(cachedEntries === 0)
+  }
+
+  test("the only mains are Bench, Verify and the dev mains Profile, Sweep and Quality") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"source scan needs the project root as working directory; ${root.toAbsolutePath} is missing")
+    val obj = """^\s*object\s+(\w+)""".r.unanchored
+    val mains = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { (p: Path) =>
+        // each `def main` belongs to the last object opened above it
+        Files.readAllLines(p).asScala.scanLeft(("", "")) {
+          case (_, obj(name)) => (name, "")
+          case ((o, _), line) => (o, line)
+        }.collect { case (o, line) if line.contains("def main(") => o }
+      }.toSet
+    assert(mains === Set("Bench", "Verify", "Profile", "Sweep", "Quality"),
+      "a dev measurement is a DevQueries entry that graft.Profile times, or a Quality study")
+  }
+
   test("no @volatile var under src/main/scala/graft/queries") {
     val root = Paths.get("src/main/scala/graft/queries")
     assert(Files.isDirectory(root),
